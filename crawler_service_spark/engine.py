@@ -10,7 +10,8 @@ Each iteration k is a pure DataFrame job over the snapshot of iteration k-1:
         -> robots filter -> in-batch first-occurrence dedup
         -> bloom fast-path + exact anti-join vs seen
         -> deterministic global seq assignment (distributed two-pass)
-        -> commit pages_out / extraction_jobs / seen / bloom / crawl_order /
+        -> commit pages_out / extraction_jobs / seen / seen filter (once the
+           probe is engaged) / crawl_order /
            frontier_pending (DELTA: append new rows) / frontier_tombstones
            (append scheduled urls) / crawl_state  (crawl_state last = the
            checkpoint; pending is reconstructed on read as appends ANTI
@@ -33,8 +34,6 @@ termination = pending-empty, replacing the 10-empty-polls heuristic
 
 from __future__ import annotations
 
-import os
-import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -45,12 +44,7 @@ from pyspark.sql import functions as F
 
 from .functions.urls import canonicalize_url_col, host_col, path_col, url_hash_col
 from .operators import politeness, traps
-from .operators.dedup import (
-    BloomSeenFilter,
-    CuckooSeenFilter,
-    anti_join_by_hash,
-    dedup_new_urls,
-)
+from .operators.dedup import BloomSeenFilter, anti_join_by_hash, dedup_new_urls
 from .operators.extraction import extract_hrefs, extract_text_col
 from .operators.grouping import emit_extraction_jobs
 from .plans import with_global_seq
@@ -79,19 +73,15 @@ class CrawlConfig:
     default_delay_s: float = 1.0
     global_cap: int | None = None     # optional cap on urls scheduled/iteration
     salt_lanes: int = 8               # host-skew salting for the rank window
-    use_bloom: bool = True
-    # probabilistic seen-set accelerator backend: "bloom" (default) or
-    # "cuckoo" (deletable — supports re-crawl/TTL expiry via remove())
-    seen_filter_kind: str = "bloom"
     bloom_buckets: int = 64
-    bloom_bits: int = 1 << 17
     # engage the bloom PROBE only once the seen set is worth it; below this the
     # exact anti-join alone is cheaper than an extra Python stage (the probe
     # costs a cogroup pass over every candidate, and its definite-new/maybe
     # union split duplicates the candidate pipeline because exchange reuse
-    # does not cross the Python cogroup node). Blobs are maintained from
-    # iteration 0 either way so engagement is seamless.
-    bloom_min_seen: int = 2_000_000
+    # does not cross the Python cogroup node). No filter exists below the
+    # gate: the first probed iteration builds it from the seen snapshot, its
+    # bits sized from that row count. None = exact anti-join only, always.
+    bloom_min_seen: int | None = 2_000_000
     emit_jobs: bool = True
     # F7 too-large-group skip (reference: '502' on huge dirs => skip + record,
     # crawlers/globus_base_preserved.py:294-297): families with more members
@@ -171,29 +161,10 @@ class CrawlEngine:
             # front (in production this partitioning pre-exists as Iceberg
             # bucketing — it must not be re-paid inside every iteration)
             self.pages.count()
-        if not self.config.use_bloom:
-            self.bloom = None
-        elif self.config.seen_filter_kind == "cuckoo":
-            # Sizing (ADVICE r2): capacity must at least cover the probe
-            # engagement point (bloom_min_seen), else every partition overflows
-            # to all-maybe before the filter is ever consulted — safe but
-            # strictly slower than no filter. ~1.10 headroom keeps the load
-            # factor under the ~95% 4-way-cuckoo bound; B is rounded UP to a
-            # power of two (the alternate-bucket XOR walk requires it).
-            want_slots = max(
-                self.config.bloom_bits // 16,  # comparable memory/bucket floor
-                int(1.10 * self.config.bloom_min_seen / self.config.bloom_buckets),
-            )
-            B = 1 << max(0, (max(want_slots // 4, 1) - 1).bit_length())
-            self.bloom = CuckooSeenFilter(
-                self.catalog, n_buckets=self.config.bloom_buckets, n_slots=4 * B
-            )
-        else:
-            self.bloom = BloomSeenFilter(
-                self.catalog,
-                n_buckets=self.config.bloom_buckets,
-                m_bits=self.config.bloom_bits,
-            )
+        self.bloom = (
+            None if self.config.bloom_min_seen is None
+            else BloomSeenFilter(self.catalog, n_buckets=self.config.bloom_buckets)
+        )
 
     # ------------------------------------------------------------------ state
     def last_state(self) -> dict | None:
@@ -202,6 +173,11 @@ class CrawlEngine:
 
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
+
+    def _probing(self, next_seq: int) -> bool:
+        """Whether an iteration whose previous state has ``next_seq`` (the
+        seen-set size) probes the filter; monotone, as next_seq only grows."""
+        return self.bloom is not None and next_seq >= self.config.bloom_min_seen
 
     # ------------------------------------------------------------------- seed
     def seed(self, seeds: DataFrame) -> None:
@@ -228,7 +204,8 @@ class CrawlEngine:
             "seq", F.lit(0).alias("discovered_iter"),
         )
         frontier = frontier.localCheckpoint(eager=False)
-        n = frontier.count()
+        # one action: the count that sizes the state, and the crawl id
+        n, crawl_id = frontier.agg(F.count(F.lit(1)), F.min("crawl_id")).collect()[0]
         self.catalog.commit("frontier_pending", frontier, "pending-iter-0", mode="overwrite")
         self.catalog.commit(
             "seen",
@@ -245,12 +222,10 @@ class CrawlEngine:
                 traps.template_delta(frontier.select("url")),
                 "traps-iter-0", coalesce=1,
             )
-        if self.bloom:
-            self.bloom.update(frontier.select("url"), "bloom-iter-0")
         self.catalog.commit_rows(
             "crawl_state",
             [dict(
-                crawl_id=self._crawl_id(frontier), iteration=0, status="running",
+                crawl_id=crawl_id or "crawl-unknown", iteration=0, status="running",
                 scheduled=0, fetched=0, failed=0, new_urls=n, frontier_pending=n,
                 tombstones=0, next_seq=int(n), families=0, bytes_crawled=0, wall_ms=0,
             )],
@@ -271,19 +246,6 @@ class CrawlEngine:
         # int64-keyed anti-join (url equality residual): the per-iteration
         # pending reconstruction never shuffles/sorts frontier-scale strings
         return anti_join_by_hash(pending, tombs)
-
-    @staticmethod
-    def _crawl_id(df: DataFrame) -> str:
-        r = df.select("crawl_id").limit(1).collect()
-        return r[0][0] if r else "crawl-unknown"
-
-    _TRACE = os.environ.get("SPARK_CRAWL_TRACE") == "1"
-
-    def _trace(self, label: str, t0: float) -> float:
-        t = time.monotonic()
-        if self._TRACE:
-            print(f"      [{label}] {t - t0:.2f}s", file=sys.stderr, flush=True)
-        return t
 
     def _commit_observed(
         self, table: str, df: DataFrame, commit_id: str, metrics: dict,
@@ -308,7 +270,6 @@ class CrawlEngine:
     # -------------------------------------------------------------- iteration
     def run_iteration(self, k: int) -> dict:
         t0 = time.monotonic()
-        tp = t0  # trace segment cursor (t0 stays = iteration start)
         cfg = self.config
         prev = f"iter-{k - 1}"
         pending = self.read_pending(k - 1)
@@ -341,7 +302,6 @@ class CrawlEngine:
             .drop("html")
             .localCheckpoint(eager=cfg.eager_checkpoints)  # consumers read blocks
         )
-        tp = self._trace("fetch+extract ckpt", tp) if self._TRACE else tp
         ok = fetched.filter(F.col("fetch_ok"))
         failures = fetched.filter(~F.col("fetch_ok")).select(
             "crawl_id", F.lit(k).alias("iteration"), "url", F.lit("not_found").alias("reason")
@@ -404,8 +364,16 @@ class CrawlEngine:
                     deltas, cfg.trap_ratio_permille, cfg.trap_min_urls
                 )
                 firsts = firsts.join(F.broadcast(flagged), "host", "left_anti")
-        probe_bloom = self.bloom if next_seq >= cfg.bloom_min_seen else None
-        new = dedup_new_urls(firsts, seen, probe_bloom, bloom_upto=f"bloom-{prev}")
+        probe = self._probing(next_seq)
+        if probe:
+            # engagement: the first probed iteration builds the filter from
+            # the seen snapshot it probes against. Idempotent by commit id, so
+            # later iterations (whose previous one committed bloom-{prev})
+            # and resumes skip it.
+            self.bloom.build(seen.select("url"), f"bloom-{prev}")
+        new = dedup_new_urls(
+            firsts, seen, self.bloom if probe else None, bloom_upto=f"bloom-{prev}"
+        )
         new = new.select(
             "crawl_id", "url", "url_hash", "host", "path",
             (F.col("okey.pd") + 1).alias("depth"),
@@ -418,7 +386,6 @@ class CrawlEngine:
         # child, which would otherwise evaluate the whole candidate+dedup
         # pipeline a second time (measured as twin full-cost stages).
         new = new.localCheckpoint(eager=cfg.eager_checkpoints)
-        tp = self._trace("cand+dedup ckpt", tp) if self._TRACE else tp
         # with_global_seq pins its own partitioning (localCheckpoint inside);
         # the stamp map is deterministic, so downstream branches may re-run it
         # cheaply off those blocks — no second checkpoint needed.
@@ -432,7 +399,6 @@ class CrawlEngine:
             *[c for c in FRONTIER_COLS if c != "discovered_iter"],
             F.lit(k).alias("discovered_iter"),
         ).localCheckpoint(eager=cfg.eager_checkpoints)  # stamp map runs once, 4 consumers share
-        tp = self._trace("seq+stamp ckpt", tp) if self._TRACE else tp
 
         # Frontier delta-commit vs compaction (decided from the PREVIOUS
         # state so the concurrent commits don't wait on each other's counts):
@@ -457,7 +423,6 @@ class CrawlEngine:
         # resumes exactly (partially-committed iterations re-run and skip
         # finished commits).
         it = f"iter-{k}"
-        tt = self._trace("pre(total)", t0)
 
         def c_order():
             return self._commit_observed(
@@ -511,8 +476,11 @@ class CrawlEngine:
             )
 
         def c_bloom():
-            if self.bloom:
-                self.bloom.update(new_frontier.select("url"), f"bloom-{it}", upto=f"bloom-{prev}")
+            if probe:
+                batch = new_frontier.select("url")
+                self.bloom.update(
+                    batch, f"bloom-{it}", rebuild_from=seen.select("url").unionByName(batch)
+                )
 
         def c_pend():
             if compact:
@@ -590,7 +558,6 @@ class CrawlEngine:
             futs["bloom"].result()
             futs["tomb"].result()
             futs["traps"].result()
-        tt = self._trace("commits(concurrent)", tt)
         n_sched, n_ok = int(m_order["n_sched"]), int(m_pages["n_ok"])
         n_new = int(m_seen["n_new"])
         # live pending is exact arithmetic (scheduled rows always come from
@@ -635,12 +602,15 @@ class CrawlEngine:
           seqs (scheduled exactly once on resume). The seen set keeps their
           rows, so links to them keep deduping — no double-crawl.
         - ``mode="forget"``: expired urls are deleted from the seen table
-          (hash-keyed anti-join rewrite) and their fingerprints removed from
-          the cuckoo filter — the deletable backend's reason to exist; the
-          bloom backend cannot delete, so its stale bits just cost extra
-          exact lookups (safe direction). The url is re-crawled when some
+          (hash-keyed anti-join rewrite). Once the probe is engaged, the
+          seen filter is rebuilt from the kept rows, so it forgets them too
+          and they probe definitely-new. The url is re-crawled when some
           future page links to it, admitted exactly once by the standard
           dedup invariant.
+
+        Recrawl changes no seen row and writes no filter commit; the next
+        probed iteration finds no ``bloom-iter-{k}`` and builds one from the
+        seen table, as at engagement.
 
         Unknown urls (never seen) are ignored. Returns counters.
         """
@@ -687,17 +657,12 @@ class CrawlEngine:
                 ).repartition(1),
                 f"seen-{it}",
             )
-            if self.bloom:
-                self.bloom.update(ex.select("url").limit(0), f"bloom-{it}", upto=f"bloom-{prev}")
         else:  # forget
             kept = anti_join_by_hash(seen, ex.select("url_hash", "url"))
             self.catalog.commit("seen", kept, f"seen-{it}", mode="overwrite")
             n_exp = 0  # forget adds nothing to pending
-            if isinstance(self.bloom, CuckooSeenFilter):
-                self.bloom.remove(ex.select("url"), f"bloom-{it}", upto=f"bloom-{prev}")
-            elif self.bloom:
-                # bloom cannot delete; keep the commit chain anchored
-                self.bloom.update(ex.select("url").limit(0), f"bloom-{it}", upto=f"bloom-{prev}")
+            if self._probing(next_seq):
+                self.bloom.build(kept.select("url"), f"bloom-{it}")
         if mode == "forget":
             self.catalog.commit(
                 "frontier_pending",

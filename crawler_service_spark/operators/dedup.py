@@ -10,29 +10,35 @@ cannot live in one memory image, so:
   ``(url_hash, url)`` — the full url string is part of the join key because
   xxhash64 *will* collide a handful of times at 10^10 keys, and a collision
   must never drop an unseen URL;
-- a **partitioned Bloom filter** (``seen_filters(bucket, bits)``; one blob per
+- a **partitioned Bloom filter** (``seen_filters``; one blob per
   ``pmod(url_hash, n_buckets)`` bucket) accelerates the common case. Direction
   of approximation is the safe one: bloom says "definitely new" (skip the
   exact join entirely) or "maybe seen" (fall through to the exact anti-join).
   False positives only cost extra exact lookups; they can never lose URLs.
   Sizing at 10^10 keys / 1% fpp ≈ 12 GB of bits — which is exactly why the
   filter is bucketed and lives distributed in a table, never on the driver
-  (unlike ``df.stat.bloomFilter`` which collects to one driver-side filter);
-- a **partitioned cuckoo filter** (``CuckooSeenFilter``) as the deletable
-  alternative — same storage/probing pattern, 4-way partial-key buckets,
-  and ``remove()`` for re-crawl/TTL expiry of seen URLs, which Bloom cannot
-  express. Both plug into ``dedup_new_urls`` interchangeably.
+  (unlike ``df.stat.bloomFilter`` which collects to one driver-side filter).
 
-**Filter storage is LSM-shaped** (mirroring the frontier's append/tombstone/
-compact design): an ``update``/``remove`` appends one tiny *delta* row per
-touched bucket — the packed int64 hash pairs of just that batch, ~16 bytes per
-URL — instead of rewriting the merged blobs, so per-iteration filter-commit
-bytes scale with the BATCH, never the filter (a 12 GB 10^10-key filter is not
-rewritten per iteration). Readers fold a bucket's chain (base blob, if any,
-plus deltas in ``ver`` order) inside the probe UDF. Every ``compact_every``
-delta commits, the chain is folded into fresh base blobs in one overwrite
-commit, bounding read amplification; snapshot reads (``upto=``) replay the
-pre-compaction chain untouched, so time travel and resume are unaffected.
+**The filter is derived from the seen table**, which stays the source of
+truth. ``build`` folds a given URL set into fresh base blobs in one overwrite
+commit, each bucket's bit array sized from its own row count
+(``bit_array_size``; probes read m back from the blob length). The engine
+builds when the probe first engages (``CrawlConfig.bloom_min_seen``), rebuilds
+every ``compact_every`` iterations from the seen set, and rebuilds from the
+kept rows when ``expire(mode="forget")`` deletes seen rows — so the filter
+forgets too, and no deletable filter is needed. Below the gate no filter is
+written. Between builds an ``update`` appends one tiny *delta* row per touched
+bucket (the packed int64 hash pairs of that batch, ~16 bytes per URL), so
+per-iteration filter-commit bytes scale with the BATCH, never the filter. Readers
+fold a bucket's chain (base blob plus deltas in ``ver`` order) inside the
+probe UDF; snapshot reads (``upto=``) replay any earlier chain untouched, so
+time travel and resume are unaffected.
+
+Tried and lost: a partitioned cuckoo filter with a ``remove()`` delta kind
+(deletable, for expiry) and maintaining the Bloom from iteration 0. Engaged on
+a 586k-URL saturated drain the probes ran at 0.44× (bloom) and 0.15×
+(cuckoo) of the exact anti-join alone (BASELINE.md round 4), and upkeep below
+the gate cost ~3 Spark jobs per iteration for a probe that never ran.
 
 All bloom hash material is computed JVM-side (two independent xxhash64 streams);
 Python only touches int64 numpy arrays inside Arrow-batched grouped UDFs
@@ -41,8 +47,8 @@ g1 = h1 ^ (h1 >> 32) — h1's low bits double as the bucket id, so they are
 folded with the unconstrained high bits before probing; see _positions).
 
 Because base blobs bake positions into bytes while delta rows persist raw
-hashes, each table carries a ``position-scheme`` catalog marker; probing or
-updating under a different scheme than the blobs were folded with refuses
+hashes, the table carries a ``position-scheme`` catalog marker; probing or
+writing under a different scheme than the blobs were built with refuses
 loudly instead of silently false-negativing (see _check_scheme).
 """
 
@@ -71,9 +77,10 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
     0.034 ideal at kn/m≈1). Folding the unconstrained high bits into the
     low bits makes the base uniform; simulated FPR then matches
     ``(1-e^{-kn/m})^k`` to 3 decimals at both heavy and light load
-    (BASELINE.md round 5). The stride is still forced odd (coprime to the
-    power-of-two ``m`` — never degenerate-zero, k distinct positions) and
-    probes start at multiple 1, belt-and-braces with the fold."""
+    (BASELINE.md round 5). The stride is still forced odd (m is a multiple
+    of 64, so the stride is never zero mod m and k < 64 probes stay
+    distinct) and probes start at multiple 1, belt-and-braces with the
+    fold."""
     a = h1.astype(np.uint64)
     a = a ^ (a >> np.uint64(32))
     b = h2.astype(np.uint64) | np.uint64(1)
@@ -90,17 +97,26 @@ def with_bloom_hashes(df: DataFrame, url_col: str = "url", n_buckets: int = 64) 
 
 
 # --------------------------------------------------------------------------- #
-# LSM delta-chain storage shared by both filter backends
+# LSM storage: base blobs built from the seen table, plus per-batch deltas
 # --------------------------------------------------------------------------- #
 
 BLOB_SCHEMA = "bucket int, ver long, kind string, payload binary"
-_BASE, _ADD, _DEL = "base", "add", "del"
+_BASE, _ADD = "base", "add"
+# Built blobs get BITS_PER_KEY bits per folded URL: at k=7 that is
+# (1-e^{-0.7})^7 ≈ 0.8% false positives at build time. Deltas appended
+# until the next rebuild load the same bits further (safe direction).
+BITS_PER_KEY = 10
+
+
+def bit_array_size(n: int) -> int:
+    """Bit-array size for a blob folding ``n`` keys (a whole number of
+    64-bit words, at least one)."""
+    return max(64, -(-n * BITS_PER_KEY // 64) * 64)
 
 
 def _pack_hashes(h1: np.ndarray, h2: np.ndarray) -> bytes:
     """Delta payload: the batch's (h1, h2) pairs as little-endian int64s,
-    sorted so the blob is independent of Arrow batch arrival order (keeps
-    cuckoo slot layouts deterministic across re-runs)."""
+    sorted so the blob is independent of Arrow batch arrival order."""
     order = np.lexsort((h2, h1))
     return np.ascontiguousarray(
         np.concatenate([h1[order], h2[order]]).astype("<i8")
@@ -123,34 +139,68 @@ def _chain_rows(chain_pdf: pd.DataFrame):
     return [(kinds[i], bytes(payloads[i])) for i in idx]
 
 
-class _DeltaFilterBase:
-    """Catalog plumbing shared by the bloom/cuckoo backends: idempotent
-    delta appends, compaction cadence, chain reads."""
+def _set_bits(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray, k: int) -> None:
+    """OR the keys into ``bits`` in place; m is the array's own length."""
+    if len(h1):
+        pos = _positions(h1, h2, k, len(bits) * 8).ravel()
+        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
 
-    TABLE: str = ""
+
+def _member(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray, k: int) -> np.ndarray:
+    pos = _positions(h1, h2, k, len(bits) * 8)
+    return ((bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
+
+
+def _fold(ops: list[tuple[str, bytes]], m: int, k: int) -> np.ndarray:
+    """A bucket's bit array: the base blob (m read back from its length),
+    or ``m`` zero bits for a delta-only chain, with the deltas OR-ed in."""
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    for kind, payload in ops:
+        if kind == _BASE:
+            bits = np.frombuffer(payload, dtype=np.uint8).copy()
+        else:
+            _set_bits(bits, *_unpack_hashes(payload), k)
+    return bits
+
+
+class BloomSeenFilter:
+    """Partitioned bloom over the URL-seen set, persisted in the catalog (see
+    module docstring): base blobs = bit arrays built from a known URL set,
+    deltas = packed hash pairs OR-ed in at fold time (order-independent)."""
+
+    TABLE = "seen_filters"
     # Position-scheme version stamped on the table as a catalog marker.
-    # Delta rows persist raw (h1, h2) hashes — scheme-independent — but
-    # compacted BASE blobs bake bit/slot POSITIONS into bytes. A blob folded
-    # under one scheme and probed under another false-NEGATIVES silently
-    # (maybe_seen=False skips the exact anti-join), which is the one
-    # direction the filter contract forbids. Bump this string whenever
-    # _positions / _ck_fp_i1_i2 change shape.
-    SCHEME: str = ""
+    # Delta rows persist raw (h1, h2) hashes — scheme-independent — but base
+    # blobs bake bit POSITIONS into bytes. A blob built under one scheme and
+    # probed under another false-NEGATIVES silently (maybe_seen=False skips
+    # the exact anti-join), which is the one direction the filter contract
+    # forbids. Bump this string whenever _positions changes shape.
+    # v2 = xorshift-folded base + odd stride, probes i=1..k (BASELINE.md r5)
+    SCHEME = "bloom-pos-v2-xorfold"
     _SCHEME_MARKER = "position-scheme"
 
-    def __init__(self, catalog: ManifestCatalog, n_buckets: int, compact_every: int):
+    def __init__(
+        self,
+        catalog: ManifestCatalog,
+        n_buckets: int = 64,
+        m_bits: int = 1 << 17,  # per bucket, for delta-only chains (no base)
+        k_hashes: int = 7,
+        compact_every: int = 16,
+    ):
         self.catalog = catalog
         self.n_buckets = n_buckets
+        self.m_bits = m_bits
+        self.k = k_hashes
         self.compact_every = compact_every
 
     def _check_scheme(self, adopt: bool) -> None:
         """Refuse to interpret base blobs written under a different position
         scheme. Unmarked tables: an all-delta chain is portable (hashes, not
         positions), so it is adopted in place — the marker is written on the
-        next update so future folds are certified; an unmarked chain that has
-        ever compacted (any ``overwrite`` commit) predates the marker and its
-        blobs' positions cannot be trusted — rebuild from the source of truth
-        (the exact seen-set table) instead of silently re-crawling."""
+        next write so future blobs are certified; an unmarked chain with any
+        ``overwrite`` commit holds blobs that predate the marker and their
+        positions cannot be trusted — rebuild from the source of truth (the
+        exact seen-set table) instead of silently re-crawling."""
         marker = self.catalog.read_marker(self.TABLE, self._SCHEME_MARKER)
         if marker == self.SCHEME:
             return
@@ -173,96 +223,75 @@ class _DeltaFilterBase:
         if adopt:
             self.catalog.write_marker(self.TABLE, self._SCHEME_MARKER, self.SCHEME)
 
-    def _ver_and_compact(self) -> tuple[int, bool]:
-        """Next row version (= manifest count, deterministic under resume:
-        the pre-commit chain state reproduces it) and whether this commit
-        should fold the chain instead of appending another delta."""
+    def _hashed(self, urls: DataFrame) -> DataFrame:
+        return with_bloom_hashes(urls, n_buckets=self.n_buckets).select(
+            "__h1", "__h2", "__bucket"
+        )
+
+    # ------------------------------------------------------------------ build
+    def build(self, urls: DataFrame, commit_id: str) -> None:
+        """Fold ``urls`` (the whole set the filter must cover) into fresh
+        base blobs, one overwrite commit; each bucket's bit array is sized
+        from its own row count (``bit_array_size``). Idempotent by commit id."""
+        self._check_scheme(adopt=True)
+        if self.catalog.has_commit(self.TABLE, commit_id):
+            return
+        ver, k = len(self.catalog.commit_modes(self.TABLE)), self.k
+
+        def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            bits = np.zeros(bit_array_size(len(pdf)) // 8, dtype=np.uint8)
+            _set_bits(bits, pdf["__h1"].to_numpy(), pdf["__h2"].to_numpy(), k)
+            return pd.DataFrame(
+                {"bucket": [int(key[0])], "ver": [ver], "kind": [_BASE],
+                 "payload": [bits.tobytes()]}
+            )
+
+        blobs = self._hashed(urls).groupBy("__bucket").applyInPandas(fold, schema=BLOB_SCHEMA)
+        # coalesce=1: <= n_buckets rows, and a single-partition write keeps a
+        # parquet footer even when the set is empty
+        self.catalog.commit(self.TABLE, blobs, commit_id, mode="overwrite", coalesce=1)
+
+    def update(
+        self, new_urls: DataFrame, commit_id: str, rebuild_from: DataFrame | None = None
+    ) -> None:
+        """Append this batch's packed hashes as one delta row per touched
+        bucket (bytes ∝ batch). Once ``compact_every`` deltas follow the last
+        base, a call given ``rebuild_from`` (every URL the filter must cover
+        after this commit) rebuilds from it instead, bounding the chain."""
+        self._check_scheme(adopt=True)
+        if self.catalog.has_commit(self.TABLE, commit_id):
+            return  # idempotent re-run
         log = self.catalog.commit_modes(self.TABLE)
         appends = 0
         for _, mode in reversed(log):
             if mode == "overwrite":
                 break
             appends += 1
-        return len(log), appends >= self.compact_every
-
-    def _hashed(self, urls: DataFrame) -> DataFrame:
-        return with_bloom_hashes(urls, n_buckets=self.n_buckets).select(
-            "__h1", "__h2", "__bucket"
-        )
-
-    def _fold_blob_fn(self):
-        """fold(ops) -> base-blob BYTES; backends whose fold state is not raw
-        bytes override this to add the encode step."""
-        return self._fold_fn()
-
-    def _chain(self, spark, upto: str | None) -> DataFrame:
-        chain = self.catalog.read(self.TABLE, upto=upto)
-        if chain is None:
-            chain = spark.createDataFrame([], BLOB_SCHEMA)
-        return chain
-
-    def _commit_ops(
-        self, urls: DataFrame, commit_id: str, kind: str, upto: str | None
-    ) -> None:
-        """Append one packed delta row per touched bucket; every
-        ``compact_every`` deltas, fold the whole chain (plus this batch) into
-        fresh base blobs in a single overwrite commit."""
-        self._check_scheme(adopt=True)
-        if self.catalog.has_commit(self.TABLE, commit_id):
-            return  # idempotent re-run
-        ver, compact = self._ver_and_compact()
-        hashed = self._hashed(urls)
-        if not compact:
-            def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                return pd.DataFrame(
-                    {
-                        "bucket": [int(key[0])], "ver": [ver], "kind": [kind],
-                        "payload": [
-                            _pack_hashes(pdf["__h1"].to_numpy(), pdf["__h2"].to_numpy())
-                        ],
-                    }
-                )
-
-            deltas = hashed.groupBy("__bucket").applyInPandas(pack, schema=BLOB_SCHEMA)
-            # coalesce=1: delta commits are <= n_buckets tiny rows, and a
-            # single-partition write guarantees a parquet footer even when the
-            # batch is empty (schema inference on cold-session reads)
-            self.catalog.commit(self.TABLE, deltas, commit_id, coalesce=1)
+        if rebuild_from is not None and appends >= self.compact_every:
+            self.build(rebuild_from, commit_id)
             return
-        chain = self._chain(urls.sparkSession, upto)
-        # plain closure over scalar config — a bound method would drag self
-        # (catalog -> SparkSession) into the UDF pickle
-        fold = self._fold_blob_fn()
+        ver = len(log)
 
-        def merge(key, urls_pdf: pd.DataFrame, chain_pdf: pd.DataFrame):
-            ops = _chain_rows(chain_pdf)
-            if len(urls_pdf):
-                ops = ops + [
-                    (kind, _pack_hashes(
-                        urls_pdf["__h1"].to_numpy(), urls_pdf["__h2"].to_numpy()
-                    ))
-                ]
+        def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
             return pd.DataFrame(
-                {
-                    "bucket": [int(key[0])], "ver": [ver], "kind": [_BASE],
-                    "payload": [fold(ops)],
-                }
+                {"bucket": [int(key[0])], "ver": [ver], "kind": [_ADD],
+                 "payload": [_pack_hashes(pdf["__h1"].to_numpy(), pdf["__h2"].to_numpy())]}
             )
 
-        merged = (
-            hashed.groupBy("__bucket")
-            .cogroup(chain.groupBy("bucket"))
-            .applyInPandas(merge, schema=BLOB_SCHEMA)
-        )
-        self.catalog.commit(self.TABLE, merged, commit_id, mode="overwrite", coalesce=1)
+        deltas = self._hashed(new_urls).groupBy("__bucket").applyInPandas(pack, schema=BLOB_SCHEMA)
+        # coalesce=1: delta commits are <= n_buckets tiny rows (footer as above)
+        self.catalog.commit(self.TABLE, deltas, commit_id, coalesce=1)
 
-    def _probe_flags(self, candidates: DataFrame, upto: str | None) -> DataFrame:
-        """Shared probe: fold each bucket's chain inside the cogrouped UDF,
-        then vectorized membership -> ``maybe_seen``."""
+    # ------------------------------------------------------------------ probe
+    def flag_maybe_seen(self, candidates: DataFrame, upto: str | None = None) -> DataFrame:
+        """Add boolean ``maybe_seen``: False = definitely never seen (bloom
+        miss), True = needs the exact anti-join. Cogrouped by bucket so the
+        chain is folded once per bucket, not once per row."""
         self._check_scheme(adopt=False)
         chain = self.catalog.read(self.TABLE, upto=upto)
         if chain is None:
-            return candidates.withColumn("maybe_seen", F.lit(False))
+            # an absent filter would flag everything definitely new
+            raise ValueError(f"{self.TABLE}: no snapshot {upto!r} to probe; build it first")
         from pyspark.sql import types as T
 
         hashed = with_bloom_hashes(candidates, n_buckets=self.n_buckets)
@@ -271,19 +300,18 @@ class _DeltaFilterBase:
             [f for f in hashed.schema.fields if f.name != "__bucket"]
             + [T.StructField("maybe_seen", T.BooleanType(), False)]
         )
-        fold, member = self._fold_fn(), self._member_fn()
+        m, k = self.m_bits, self.k
 
         def probe(key, cand_pdf: pd.DataFrame, chain_pdf: pd.DataFrame):
-            if not len(cand_pdf):
-                return cand_pdf.drop(columns=["__bucket"]).assign(maybe_seen=True)
             out = cand_pdf.drop(columns=["__bucket"])
+            if not len(cand_pdf):
+                return out.assign(maybe_seen=True)
             ops = _chain_rows(chain_pdf)
             if not ops:
                 out["maybe_seen"] = False
                 return out
-            state = fold(ops)
-            out["maybe_seen"] = member(
-                state, cand_pdf["__h1"].to_numpy(), cand_pdf["__h2"].to_numpy()
+            out["maybe_seen"] = _member(
+                _fold(ops, m, k), cand_pdf["__h1"].to_numpy(), cand_pdf["__h2"].to_numpy(), k
             )
             return out
 
@@ -293,263 +321,6 @@ class _DeltaFilterBase:
             .applyInPandas(probe, schema=out_schema)
         )
         return flagged.drop("__h1", "__h2")
-
-
-class BloomSeenFilter(_DeltaFilterBase):
-    """Partitioned bloom over the URL-seen set, persisted in the catalog as a
-    delta chain (see module docstring): base blob = the m-bit array, deltas =
-    packed hash pairs OR-ed in at fold time (order-independent)."""
-
-    TABLE = "seen_filters"
-    # v2 = xorshift-folded base + odd stride, probes i=1..k (BASELINE.md r5)
-    SCHEME = "bloom-pos-v2-xorfold"
-
-    def __init__(
-        self,
-        catalog: ManifestCatalog,
-        n_buckets: int = 64,
-        m_bits: int = 1 << 17,
-        k_hashes: int = 7,
-        compact_every: int = 16,
-    ):
-        super().__init__(catalog, n_buckets, compact_every)
-        self.m_bits = m_bits
-        self.k = k_hashes
-
-    def _fold_fn(self):
-        m, k = self.m_bits, self.k
-
-        def fold(ops: list[tuple[str, bytes]]) -> bytes:
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            for kind, payload in ops:
-                if kind == _BASE:
-                    bits = np.frombuffer(payload, dtype=np.uint8).copy()
-                else:  # _ADD; bloom has no deletes
-                    h1, h2 = _unpack_hashes(payload)
-                    if len(h1):
-                        pos = _positions(h1, h2, k, m).ravel()
-                        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            return bits.tobytes()
-
-        return fold
-
-    def _member_fn(self):
-        m, k = self.m_bits, self.k
-
-        def member(state: bytes, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-            bits = np.frombuffer(state, dtype=np.uint8)
-            pos = _positions(h1, h2, k, m)
-            hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-            return hit.all(axis=1)
-
-        return member
-
-    # ------------------------------------------------------------------ build
-    def update(self, new_urls: DataFrame, commit_id: str, upto: str | None = None) -> None:
-        """Append this batch's packed hashes as one delta row per touched
-        bucket (bytes ∝ batch); every ``compact_every`` deltas the chain is
-        folded into base blobs in a single overwrite commit."""
-        self._commit_ops(new_urls, commit_id, _ADD, upto)
-
-    # ------------------------------------------------------------------ probe
-    def flag_maybe_seen(self, candidates: DataFrame, upto: str | None = None) -> DataFrame:
-        """Add boolean ``maybe_seen``: False = definitely never seen (bloom
-        miss), True = needs the exact anti-join. Cogrouped by bucket so the
-        chain is folded once per bucket, not once per row."""
-        return self._probe_flags(candidates, upto)
-
-
-def _ck_fp_i1_i2(h1: np.ndarray, h2: np.ndarray, B: int):
-    Bu = np.uint64(B)
-    fp = (h2.astype(np.uint64) % np.uint64(65535) + np.uint64(1)).astype(np.uint16)
-    # xorshift before the mod: the filter-bucket selector is pmod(h1, n_buckets),
-    # so within a bucket h1's low bits are constant — a bare h1 mod B (both
-    # powers of two) would pin i1 to 1/n_buckets of the slots, inflating
-    # eviction/overflow rates. Folding the high bits in decorrelates i1 from
-    # the bucket id while staying a pure function of h1 (insert/probe/delete
-    # all derive the identical index).
-    a = h1.astype(np.uint64)
-    a = a ^ (a >> np.uint64(32))
-    i1 = (a % Bu).astype(np.int64)
-    i2 = (
-        (i1.astype(np.uint64) ^ (fp.astype(np.uint64) * np.uint64(0x5BD1E995))) % Bu
-    ).astype(np.int64)
-    return fp, i1, i2
-
-
-def _ck_decode(blob: bytes | None, B: int):
-    if blob is None:
-        return np.zeros((B, 4), dtype=np.uint16), False
-    arr = np.frombuffer(blob[:-1], dtype=np.uint16).reshape(B, 4).copy()
-    return arr, blob[-1] != 0
-
-
-def _ck_encode(slots: np.ndarray, overflow: bool) -> bytes:
-    return slots.tobytes() + (b"\x01" if overflow else b"\x00")
-
-
-def _ck_bulk_place(slots: np.ndarray, fp, idx) -> np.ndarray:
-    """Vectorized first-fit of (fp, bucket-idx) pairs; returns the mask of
-    items that did NOT fit (residue for the eviction walk)."""
-    order = np.argsort(idx, kind="stable")
-    fp_s, idx_s = fp[order], idx[order]
-    # rank of each item within its bucket
-    _, starts = np.unique(idx_s, return_index=True)
-    rank = np.arange(len(idx_s)) - np.repeat(starts, np.diff(np.append(starts, len(idx_s))))
-    empty_first = np.argsort(slots[idx_s] != 0, axis=1, kind="stable")
-    n_empty = (slots[idx_s] == 0).sum(axis=1)
-    can = rank < n_empty
-    slot_pos = empty_first[np.arange(len(idx_s)), np.minimum(rank, 3)]
-    slots[idx_s[can], slot_pos[can]] = fp_s[can]
-    unplaced = np.zeros(len(fp), dtype=bool)
-    unplaced[order[~can]] = True
-    return unplaced
-
-
-def _ck_insert_all(slots: np.ndarray, fp, i1, i2, B: int, kicks: int = 500) -> bool:
-    """Insert every (fp, i1, i2); returns overflow=True if any item could not
-    be placed within the kick budget."""
-    rng = np.random.default_rng(12345)  # deterministic walk
-    res1 = _ck_bulk_place(slots, fp, i1)
-    if not res1.any():
-        return False
-    res2 = _ck_bulk_place(slots, fp[res1], i2[res1])
-    overflow = False
-    for f, a, _b in zip(fp[res1][res2], i1[res1][res2], i2[res1][res2]):
-        cur_fp, cur_b = int(f), int(a)
-        placed = False
-        for _ in range(kicks):
-            empties = np.flatnonzero(slots[cur_b] == 0)
-            if len(empties):
-                slots[cur_b, empties[0]] = cur_fp
-                placed = True
-                break
-            sslot = int(rng.integers(0, 4))
-            cur_fp, slots[cur_b, sslot] = int(slots[cur_b, sslot]), cur_fp
-            cur_b = int(
-                (np.uint64(cur_b) ^ (np.uint64(cur_fp) * np.uint64(0x5BD1E995)))
-                % np.uint64(B)
-            )
-        if not placed:
-            overflow = True
-    return overflow
-
-
-class CuckooSeenFilter(_DeltaFilterBase):
-    """Partitioned cuckoo filter over the URL-seen set — the deletable
-    alternative to BloomSeenFilter (north-star: "Bloom/cuckoo-filter URL-seen
-    set"). Same delta-chain storage pattern (module docstring), with the
-    extra ``del`` delta kind backing ``remove()``, which Bloom cannot do
-    (re-crawl/TTL expiry of seen URLs).
-
-    Layout per base blob: uint16 array of shape (n_slots/4, 4) — 4-way
-    buckets of 16-bit fingerprints (0 = empty) + a 1-byte overflow flag.
-    Partial-key cuckoo: fp = h2-derived nonzero 16-bit; i1 = h1 mod B;
-    i2 = i1 XOR (fp * 0x5bd1e995) mod B. Inserts are two vectorized
-    first-fit passes (numpy per-bucket slot assignment) with a bounded
-    eviction walk only for the residue; if a walk exhausts, the overflow
-    flag degrades that PARTITION to all-maybe — the safe direction (extra
-    exact lookups, never a lost URL). Delta folding replays add/del batches
-    in ``ver`` order with sorted in-batch order, so the slot layout is
-    deterministic across re-runs.
-    """
-
-    TABLE = "seen_cuckoo"
-    # v2 = xorshift-folded i1 slot index (same fold rationale as the bloom)
-    SCHEME = "cuckoo-slot-v2-xorfold"
-    _KICKS = 500
-
-    def __init__(
-        self,
-        catalog: ManifestCatalog,
-        n_buckets: int = 64,
-        n_slots: int = 1 << 14,   # slots per partition blob (multiple of 4)
-        compact_every: int = 16,
-    ):
-        assert n_slots % 4 == 0
-        super().__init__(catalog, n_buckets, compact_every)
-        self.n_slots = n_slots
-        self.B = n_slots // 4
-        # The alternate-bucket map i2 = (i1 ^ fp*C) mod B is an involution of
-        # the (i1, i2) pair ONLY when B is a power of two (mod = low-bit mask,
-        # and i1 < B has only low bits). With any other B a kicked fingerprint
-        # can land in a bucket the 2-way probe never checks — a FALSE NEGATIVE,
-        # which breaks the filter's "false positives only" safety contract.
-        if self.B & (self.B - 1):
-            raise ValueError(
-                f"cuckoo bucket count must be a power of two, got n_slots={n_slots} "
-                f"(B={self.B}); round n_slots to 4*2^k"
-            )
-
-    def _fold_fn(self):
-        B, kicks = self.B, self._KICKS
-
-        def fold(ops: list[tuple[str, bytes]]):
-            slots, overflow = _ck_decode(None, B)
-            for kind, payload in ops:
-                if kind == _BASE:
-                    slots, overflow = _ck_decode(payload, B)
-                    continue
-                h1, h2 = _unpack_hashes(payload)
-                if not len(h1):
-                    continue
-                fp, i1, i2 = _ck_fp_i1_i2(h1, h2, B)
-                if kind == _ADD:
-                    overflow = _ck_insert_all(slots, fp, i1, i2, B, kicks) or overflow
-                else:  # _DEL: one fingerprint occurrence per url
-                    for f, a, b in zip(fp, i1, i2):
-                        for bucket in (int(a), int(b)):
-                            hit = np.flatnonzero(slots[bucket] == f)
-                            if len(hit):
-                                slots[bucket, hit[0]] = 0
-                                break
-            return slots, overflow
-
-        return fold
-
-    def _member_fn(self):
-        B = self.B
-
-        def member(state, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-            slots, overflow = state
-            if overflow:
-                # degraded partition: safe direction (all-maybe)
-                return np.ones(len(h1), dtype=bool)
-            fp, i1, i2 = _ck_fp_i1_i2(h1, h2, B)
-            return (slots[i1] == fp[:, None]).any(axis=1) | (
-                slots[i2] == fp[:, None]
-            ).any(axis=1)
-
-        return member
-
-    def _fold_blob_fn(self):
-        # fold() returns (slots, overflow); base blobs persist via _ck_encode
-        fold = self._fold_fn()
-
-        def fold_blob(ops) -> bytes:
-            slots, overflow = fold(ops)
-            return _ck_encode(slots, overflow)
-
-        return fold_blob
-
-    # ------------------------------------------------------------------ build
-    def update(self, new_urls: DataFrame, commit_id: str, upto: str | None = None) -> None:
-        self._commit_ops(new_urls, commit_id, _ADD, upto)
-
-    # ----------------------------------------------------------------- delete
-    def remove(self, urls: DataFrame, commit_id: str, upto: str | None = None) -> None:
-        """Delete one fingerprint occurrence per url — the operation Bloom
-        cannot support (re-crawl / TTL expiry).
-
-        Standard cuckoo contract: only delete urls that WERE inserted.
-        Fingerprints are multiset copies, so colliding items stay findable as
-        long as inserts and deletes pair up; deleting a never-inserted url is
-        undefined (it may consume a colliding item's copy)."""
-        self._commit_ops(urls, commit_id, _DEL, upto)
-
-    # ------------------------------------------------------------------ probe
-    def flag_maybe_seen(self, candidates: DataFrame, upto: str | None = None) -> DataFrame:
-        return self._probe_flags(candidates, upto)
 
 
 def anti_join_by_hash(

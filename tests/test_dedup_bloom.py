@@ -5,20 +5,33 @@ approximation direction can only cost extra work, never lose URLs.
   ``maybe_seen=True`` on probe — even in a deliberately saturated filter;
 - end-to-end: ``dedup_new_urls`` returns exactly the unseen set with a
   near-100%-fpp bloom (the exact anti-join backstop catches all false
-  positives).
+  positives);
+- the filter is derived from the seen table: built (bits sized from the row
+  count) when the probe first engages, rebuilt on the compaction cadence,
+  never written below the gate.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from crawler_service_spark.engine import CrawlConfig, CrawlEngine
 from crawler_service_spark.functions.urls import url_hash_col
-from crawler_service_spark.operators.dedup import BloomSeenFilter, dedup_new_urls
+from crawler_service_spark.operators.dedup import (
+    BloomSeenFilter,
+    _member,
+    _set_bits,
+    bit_array_size,
+    dedup_new_urls,
+)
 from crawler_service_spark.storage import ManifestCatalog
+from tests.oracle import load_fixture, oracle_crawl
 
 SEEN_URLS = [f"https://h{i % 7}.example.com/seen/{i}" for i in range(300)]
 NEW_URLS = [f"https://h{i % 7}.example.com/new/{i}" for i in range(120)]
+ITER_S = 4.0  # small per-host budget => the tiny fixture needs several iterations
 
 
 @pytest.fixture()
@@ -73,98 +86,10 @@ def test_incremental_update_across_commits(spark, catalog):
     bloom = BloomSeenFilter(catalog, n_buckets=2, m_bits=1 << 12, k_hashes=5)
     a, b = SEEN_URLS[:150], SEEN_URLS[150:]
     bloom.update(urls_df(spark, a).select("url"), "bloom-0")
-    bloom.update(urls_df(spark, b).select("url"), "bloom-1", upto="bloom-0")
+    bloom.update(urls_df(spark, b).select("url"), "bloom-1")
 
     flagged = bloom.flag_maybe_seen(urls_df(spark, SEEN_URLS), upto="bloom-1")
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
-
-
-# --------------------------------------------------------------------------- #
-# cuckoo filter (the deletable seen-set accelerator)
-# --------------------------------------------------------------------------- #
-
-
-def test_cuckoo_no_false_negatives_and_low_fp(spark, catalog):
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=8, n_slots=1 << 12)
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    flagged = ck.flag_maybe_seen(urls_df(spark, SEEN_URLS + NEW_URLS))
-    got = {r["url"]: r["maybe_seen"] for r in flagged.collect()}
-    assert all(got[u] for u in SEEN_URLS), "cuckoo must never produce a false negative"
-    fp = sum(got[u] for u in NEW_URLS) / len(NEW_URLS)
-    assert fp < 0.05, f"false-positive rate {fp:.2%} unexpectedly high"
-
-
-def test_cuckoo_remove_supports_recrawl(spark, catalog):
-    """Deletion — the capability Bloom lacks: removed URLs flag definitely-new
-    again while everything else stays seen (modulo fingerprint collisions,
-    which only flip toward maybe, never toward lost)."""
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=8, n_slots=1 << 12)
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    expired = SEEN_URLS[:40]
-    ck.remove(urls_df(spark, expired), "ck-2", upto="ck-1")
-    got = {
-        r["url"]: r["maybe_seen"]
-        for r in ck.flag_maybe_seen(urls_df(spark, SEEN_URLS), upto="ck-2").collect()
-    }
-    # removed urls may only stay 'maybe' via a fingerprint collision: rare
-    still_flagged = sum(got[u] for u in expired)
-    assert still_flagged <= 2, f"{still_flagged}/40 removed urls still flagged"
-    kept = [u for u in SEEN_URLS[40:]]
-    assert all(got[u] for u in kept), "non-removed urls must remain seen"
-
-
-def test_cuckoo_dedup_integration_equals_exact(spark, catalog):
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=8, n_slots=1 << 12)
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    seen = urls_df(spark, SEEN_URLS)
-    cand = urls_df(spark, SEEN_URLS[:50] + NEW_URLS)
-    got = sorted(
-        r["url"] for r in dedup_new_urls(cand, seen, ck, bloom_upto="ck-1").collect()
-    )
-    assert got == sorted(NEW_URLS)
-
-
-def test_cuckoo_overflow_degrades_safe(spark, catalog):
-    """A deliberately tiny table overflows; the partition degrades to
-    all-maybe — extra exact lookups, never a lost URL."""
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=1, n_slots=64)  # 64 slots, 300 urls
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    flagged = ck.flag_maybe_seen(urls_df(spark, SEEN_URLS))
-    assert all(r["maybe_seen"] for r in flagged.collect())
-
-
-def test_crawl_with_cuckoo_backend_matches_oracle(spark, tiny_fixture, tmp_path):
-    """Full crawl with the cuckoo accelerator engaged from iteration 0
-    produces the identical crawl to the exact/bloom paths."""
-    import sys
-
-    from crawler_service_spark.engine import CrawlConfig, CrawlEngine
-
-    sys.path.insert(0, "/root/repo/tests")
-    from conftest import engine_snapshot
-
-    snaps = []
-    for name, kind in [("bloom", "bloom"), ("cuckoo", "cuckoo")]:
-        eng = CrawlEngine(
-            spark,
-            spark.read.parquet(tiny_fixture["pages"]),
-            spark.read.parquet(tiny_fixture["robots_rules"]),
-            str(tmp_path / name),
-            CrawlConfig(
-                iteration_seconds=60.0, bloom_min_seen=0, seen_filter_kind=kind
-            ),
-        )
-        eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
-        snaps.append(engine_snapshot(eng))
-    assert snaps[0] == snaps[1]
 
 
 def _commit_bytes(catalog, table):
@@ -187,7 +112,7 @@ def test_filter_delta_commit_bytes_scale_with_batch(spark, catalog):
     of magnitude less than the folded base blobs."""
     bloom = BloomSeenFilter(catalog, n_buckets=16, m_bits=1 << 17, compact_every=100)
     bloom.update(urls_df(spark, SEEN_URLS).select("url"), "b-0")
-    bloom.update(urls_df(spark, NEW_URLS[:5]).select("url"), "b-1", upto="b-0")
+    bloom.update(urls_df(spark, NEW_URLS[:5]).select("url"), "b-1")
     sizes = _commit_bytes(catalog, BloomSeenFilter.TABLE)
     base_bytes = 16 * (1 << 17) // 8  # what full blobs would cost
     assert sizes["b-1"] < base_bytes / 20, (
@@ -199,88 +124,116 @@ def test_filter_delta_commit_bytes_scale_with_batch(spark, catalog):
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_filter_compaction_fold_equivalence(spark, catalog, kind):
-    """After compact_every deltas the chain folds into base blobs (one
-    overwrite commit); probes across the fold boundary are identical."""
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    if kind == "bloom":
-        f = BloomSeenFilter(catalog, n_buckets=4, m_bits=1 << 14, compact_every=2)
-    else:
-        f = CuckooSeenFilter(catalog, n_buckets=4, n_slots=1 << 12, compact_every=2)
+def test_filter_compaction_rebuild_equivalence(spark, catalog):
+    """After compact_every deltas an update given ``rebuild_from`` rebuilds
+    base blobs from it (one overwrite commit); probes across the rebuild
+    are identical."""
+    f = BloomSeenFilter(catalog, n_buckets=4, m_bits=1 << 14, compact_every=2)
     chunks = [SEEN_URLS[i::4] for i in range(4)]
-    prev = None
+    covered = []
     for i, chunk in enumerate(chunks):
-        f.update(urls_df(spark, chunk).select("url"), f"c-{i}", upto=prev)
-        prev = f"c-{i}"
+        covered += chunk
+        f.update(
+            urls_df(spark, chunk).select("url"), f"c-{i}",
+            rebuild_from=urls_df(spark, covered).select("url"),
+        )
     modes = dict(catalog.commit_modes(f.TABLE))
-    assert "overwrite" in modes.values(), "compaction never triggered"
-    assert modes["c-0"] == "append"
-    flagged = f.flag_maybe_seen(urls_df(spark, SEEN_URLS + NEW_URLS), upto=prev)
+    assert modes == {"c-0": "append", "c-1": "append", "c-2": "overwrite", "c-3": "append"}
+    flagged = f.flag_maybe_seen(urls_df(spark, SEEN_URLS + NEW_URLS), upto="c-3")
     got = {r["url"]: r["maybe_seen"] for r in flagged.collect()}
-    assert all(got[u] for u in SEEN_URLS), "no false negatives across the fold"
+    assert all(got[u] for u in SEEN_URLS), "no false negatives across the rebuild"
     fp = sum(got[u] for u in NEW_URLS) / len(NEW_URLS)
-    assert fp < 0.2, f"fpp {fp:.2%} after compaction"
-    # pre-compaction snapshots still replay the delta chain untouched
+    assert fp < 0.2, f"fpp {fp:.2%} after the rebuild"
+    # pre-rebuild snapshots still replay the delta chain untouched
     early = f.flag_maybe_seen(urls_df(spark, chunks[0]), upto="c-0")
     assert early.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_cuckoo_blob_model_property():
-    """Model-based check of the blob-level cuckoo ops (pure numpy, no Spark):
-    against a multiset model, after any interleaving of inserts and deletes
-    there is NEVER a false negative, and deletes only remove present items."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
+def test_build_sizes_bits_from_the_row_count(spark, catalog):
+    """A build sizes each bucket's bit array from that bucket's row count,
+    and fold/probe read m back from the blob, so a delta appended onto a
+    built base lands in the same bit array (the constructor's m_bits is
+    deliberately different and must not be used)."""
+    bloom = BloomSeenFilter(catalog, n_buckets=4, m_bits=1 << 12)
+    bloom.build(urls_df(spark, SEEN_URLS).select("url"), "b-0")
+    per_bucket = {
+        r["b"]: r["n"]
+        for r in urls_df(spark, SEEN_URLS)
+        .groupBy(F.pmod(F.xxhash64("url"), F.lit(4)).alias("b")).count()
+        .withColumnRenamed("count", "n").collect()
+    }
+    blobs = catalog.read(bloom.TABLE, upto="b-0").collect()
+    assert {r["bucket"]: len(r["payload"]) * 8 for r in blobs} == {
+        b: bit_array_size(n) for b, n in per_bucket.items()
+    }
+    assert all(r["kind"] == "base" for r in blobs)
+    bloom.update(urls_df(spark, NEW_URLS[:20]).select("url"), "b-1")
+    flagged = bloom.flag_maybe_seen(urls_df(spark, SEEN_URLS + NEW_URLS[:20]), upto="b-1")
+    assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
-    from crawler_service_spark.operators.dedup import (
-        _ck_decode,
-        _ck_encode,
-        _ck_fp_i1_i2,
-        _ck_insert_all,
+
+def test_probe_refuses_a_missing_snapshot(spark, catalog):
+    """An absent filter would flag every candidate definitely new."""
+    bloom = BloomSeenFilter(catalog, n_buckets=2)
+    with pytest.raises(ValueError, match="no snapshot"):
+        bloom.flag_maybe_seen(urls_df(spark, SEEN_URLS), upto="never-built")
+
+
+def test_filter_sized_for_an_engagement_build_meets_one_percent():
+    """Pure numpy: one bucket of a 2M-URL build over the default 64 buckets
+    (h1 pinned to the bucket's residue, as ``pmod(h1, 64)`` pins it),
+    sized by ``bit_array_size``, keeps the simulated false-positive rate at
+    or under 1%. The retired fixed 2^17 bits per bucket read ~23% here."""
+    rng = np.random.default_rng(11)
+    n, probes, k = 2_000_000 // 64, 200_000, 7
+
+    def hashes(count):
+        h1 = (rng.integers(0, 2**62, count) // 64 * 64 + 9).astype(np.int64)
+        return h1, rng.integers(0, 2**62, count).astype(np.int64)
+
+    bits = np.zeros(bit_array_size(n) // 8, dtype=np.uint8)
+    _set_bits(bits, *hashes(n), k)
+    fpr = _member(bits, *hashes(probes), k).mean()
+    assert fpr <= 0.01, f"simulated FPR {fpr:.4f} at the engagement size"
+
+
+def test_probe_gate_builds_from_seen_and_matches_oracle(spark, tiny_fixture, tmp_path):
+    """With ``bloom_min_seen`` between the seed count and the final seen
+    count, the crawl equals the oracle; no filter commit exists before the
+    gate; the first commit is a build from the seen snapshot of the
+    iteration before the first probed one, and it flags every URL in that
+    snapshot (no false negatives)."""
+    pages, seeds, robots = load_fixture(tiny_fixture)
+    oracle = oracle_crawl(pages, seeds, robots, iteration_seconds=ITER_S)
+    n_seeds = sum(1 for _it, _seq, depth, _url in oracle.order if depth == 0)
+    gate = (n_seeds + len(oracle.seen)) // 2
+    assert n_seeds < gate < len(oracle.seen)
+    eng = CrawlEngine(
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        spark.read.parquet(tiny_fixture["robots_rules"]),
+        str(tmp_path / "gate"),
+        CrawlConfig(iteration_seconds=ITER_S, bloom_min_seen=gate),
     )
+    eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
 
-    B = 64  # 256 slots
+    order = [
+        (r["iteration"], r["seq"], r["depth"], r["url"])
+        for r in eng.catalog.read("crawl_order")
+        .orderBy("iteration", "depth", F.desc("priority"), "seq").collect()
+    ]
+    assert order == oracle.order
+    assert {r["url"] for r in eng.catalog.read("seen").collect()} == oracle.seen
 
-    def hashes(key: int):
-        h1 = np.array([hash(("h1", key)) & 0x7FFFFFFFFFFFFFFF], dtype=np.int64)
-        h2 = np.array([hash(("h2", key)) & 0x7FFFFFFFFFFFFFFF], dtype=np.int64)
-        return _ck_fp_i1_i2(h1, h2, B)
-
-    @settings(max_examples=30, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.sampled_from(["add", "del"]), st.integers(0, 40)),
-            min_size=1, max_size=120,
-        )
+    states = sorted(
+        (r["iteration"], r["next_seq"]) for r in eng.catalog.read("crawl_state").collect()
     )
-    def run(ops):
-        slots, overflow = _ck_decode(None, B)
-        model: dict[int, int] = {}
-        for op, key in ops:
-            fp, i1, i2 = hashes(key)
-            if op == "add":
-                overflow = _ck_insert_all(slots, fp, i1, i2, B) or overflow
-                model[key] = model.get(key, 0) + 1
-            elif model.get(key, 0) > 0:
-                for bucket in (int(i1[0]), int(i2[0])):
-                    hit = np.flatnonzero(slots[bucket] == fp[0])
-                    if len(hit):
-                        slots[bucket, hit[0]] = 0
-                        break
-                model[key] -= 1
-        # round-trip through encoding
-        slots2, overflow2 = _ck_decode(_ck_encode(slots, overflow), B)
-        assert (slots2 == slots).all() and overflow2 == overflow
-        if not overflow:
-            for key, cnt in model.items():
-                if cnt > 0:
-                    fp, i1, i2 = hashes(key)
-                    present = (slots[int(i1[0])] == fp[0]).any() or (
-                        slots[int(i2[0])] == fp[0]
-                    ).any()
-                    assert present, f"false negative for key {key}"
+    engaged = next(i for i, next_seq in states if next_seq >= gate)
+    assert engaged < states[-1][0], "the gate must engage before the crawl ends"
+    modes = eng.catalog.commit_modes(BloomSeenFilter.TABLE)
+    assert modes[0] == (f"bloom-iter-{engaged}", "overwrite")
+    assert all(int(c.rsplit("-", 1)[1]) >= engaged for c, _m in modes)
 
-    run()
+    snap = eng.catalog.read("seen", upto=f"seen-iter-{engaged}").select("url", "url_hash")
+    flagged = eng.bloom.flag_maybe_seen(snap, upto=f"bloom-iter-{engaged}")
+    assert flagged.filter(~F.col("maybe_seen")).count() == 0

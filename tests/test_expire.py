@@ -6,8 +6,10 @@ resume() keep working untouched:
 - recrawl: expired urls re-enter the frontier with fresh seqs and are
   re-scheduled EXACTLY once; the seen set keeps their rows so links to them
   keep deduping (no double-crawl).
-- forget: seen rows deleted + cuckoo fingerprints removed; the url is
-  re-admitted exactly once by the standard dedup invariant when next linked.
+- forget: seen rows deleted, and once the probe is engaged the seen filter
+  is rebuilt from the kept rows, so the forgotten urls probe definitely
+  new; the url is re-admitted exactly once by the standard dedup invariant
+  when next linked.
 """
 
 from __future__ import annotations
@@ -28,11 +30,11 @@ def _build(spark, fixture, workdir, **cfg):
     )
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["exact", "bloom"])
 def test_expire_recrawl_exactly_once(spark, tiny_fixture, tmp_path, kind):
     eng = _build(
         spark, tiny_fixture, tmp_path / kind,
-        bloom_min_seen=0, seen_filter_kind=kind,
+        bloom_min_seen=None if kind == "exact" else 0,
     )
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     st0 = eng.last_state()
@@ -66,13 +68,10 @@ def test_expire_recrawl_exactly_once(spark, tiny_fixture, tmp_path, kind):
     assert seen_counts.filter("n > 1").count() == 0
 
 
-def test_expire_forget_cuckoo_readmits_exactly_once(spark, tiny_fixture, tmp_path):
+def test_expire_forget_readmits_exactly_once(spark, tiny_fixture, tmp_path):
     from crawler_service_spark.operators.dedup import dedup_new_urls
 
-    eng = _build(
-        spark, tiny_fixture, tmp_path / "forget",
-        bloom_min_seen=0, seen_filter_kind="cuckoo",
-    )
+    eng = _build(spark, tiny_fixture, tmp_path / "forget", bloom_min_seen=0)
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     k = int(eng.last_state()["iteration"])
     all_seen = sorted(r["url"] for r in eng.catalog.read("seen").select("url").collect())
@@ -86,14 +85,18 @@ def test_expire_forget_cuckoo_readmits_exactly_once(spark, tiny_fixture, tmp_pat
     left = sorted(r["url"] for r in seen_after.select("url").collect())
     assert left == [u for u in all_seen if u not in expired]
 
-    # the deletable filter actually forgot them: probing the expired urls
-    # flags definitely-new (modulo rare fp collisions), so a future link
-    # re-admits them through the normal dedup path exactly once
+    # the filter rebuilt from the kept rows forgot them: probing the
+    # expired urls flags definitely-new, so a future link re-admits them
+    # through the normal dedup path exactly once
     from crawler_service_spark.functions.urls import url_hash_col
 
+    assert eng.catalog.commit_modes("seen_filters")[-1] == (f"bloom-iter-{k + 1}", "overwrite")
     cand = ex_df.withColumn("url_hash", url_hash_col("url"))
     flagged = eng.bloom.flag_maybe_seen(cand, upto=f"bloom-iter-{k + 1}")
-    assert flagged.filter(F.col("maybe_seen")).count() <= 1
+    assert flagged.filter(F.col("maybe_seen")).count() == 0
+    kept = seen_after.select("url", "url_hash")
+    assert eng.bloom.flag_maybe_seen(kept, upto=f"bloom-iter-{k + 1}") \
+        .filter(~F.col("maybe_seen")).count() == 0
     admitted = dedup_new_urls(
         cand, seen_after, eng.bloom, bloom_upto=f"bloom-iter-{k + 1}"
     )

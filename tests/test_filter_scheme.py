@@ -1,18 +1,18 @@
 """Position-scheme marker on the persisted seen filters (SURVEY.md §5.2).
 
 Delta rows persist raw (h1, h2) hashes — portable across probe-scheme
-changes — but compacted base blobs bake bit/slot POSITIONS into bytes. A
-blob folded under one scheme and probed under another false-negatives
+changes — but built base blobs bake bit POSITIONS into bytes. A
+blob built under one scheme and probed under another false-negatives
 silently, and ``maybe_seen=False`` skips the exact anti-join: the one
 failure direction the filter contract forbids. The catalog marker makes
 that mismatch a loud refusal instead:
 
-- fresh tables are stamped at first update and stay valid through
-  compaction and snapshot (``upto=``) probes;
+- fresh tables are stamped at first write and stay valid through
+  rebuilds and snapshot (``upto=``) probes;
 - an unmarked all-delta chain (pre-marker layout, never compacted) is
   adopted in place — hashes need no migration;
-- an unmarked chain that HAS compacted, or a marker naming a different
-  scheme, refuses both update and probe with a rebuild instruction.
+- an unmarked chain that HAS a built base, or a marker naming a different
+  scheme, refuses writes and probes with a rebuild instruction.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_service_spark.operators.dedup import BloomSeenFilter, CuckooSeenFilter
+from crawler_service_spark.operators.dedup import BloomSeenFilter
 from crawler_service_spark.storage import ManifestCatalog
 
 SEEN = [f"https://h{i % 5}.example.com/seen/{i}" for i in range(80)]
@@ -48,7 +48,7 @@ def test_fresh_table_stamped_and_survives_compaction(spark, catalog):
     bloom.update(urls_df(spark, SEEN[:40]), "b0")
     assert catalog.read_marker(bloom.TABLE, "position-scheme") == bloom.SCHEME
 
-    bloom.update(urls_df(spark, SEEN[40:]), "b1")  # triggers a fold
+    bloom.update(urls_df(spark, SEEN[40:]), "b1", rebuild_from=urls_df(spark, SEEN))
     modes = [m for _c, m in catalog.commit_modes(bloom.TABLE)]
     assert "overwrite" in modes, "test must exercise a compacted chain"
     assert catalog.read_marker(bloom.TABLE, "position-scheme") == bloom.SCHEME
@@ -82,13 +82,15 @@ def test_unmarked_compacted_chain_refused(spark, catalog):
     bloom = BloomSeenFilter(catalog, n_buckets=2, m_bits=1 << 12, k_hashes=5,
                             compact_every=1)
     bloom.update(urls_df(spark, SEEN[:40]), "b0")
-    bloom.update(urls_df(spark, SEEN[40:]), "b1")  # fold -> base blobs
+    bloom.update(urls_df(spark, SEEN[40:]), "b1", rebuild_from=urls_df(spark, SEEN))
     os.remove(marker_path(catalog, bloom.TABLE))
 
     with pytest.raises(ValueError, match="predate the position-scheme marker"):
         bloom.flag_maybe_seen(urls_df(spark, SEEN)).count()
     with pytest.raises(ValueError, match="predate the position-scheme marker"):
         bloom.update(urls_df(spark, NEW), "b2")
+    with pytest.raises(ValueError, match="predate the position-scheme marker"):
+        bloom.build(urls_df(spark, SEEN + NEW), "b2")
 
 
 def test_mismatched_scheme_refused(spark, catalog):
@@ -100,20 +102,6 @@ def test_mismatched_scheme_refused(spark, catalog):
         bloom.flag_maybe_seen(urls_df(spark, SEEN)).count()
     with pytest.raises(ValueError, match="not portable across schemes"):
         bloom.update(urls_df(spark, NEW), "b1")
-
-
-def test_cuckoo_guard_and_lifecycle(spark, catalog):
-    ck = CuckooSeenFilter(catalog, n_buckets=2, n_slots=1 << 10, compact_every=1)
-    ck.update(urls_df(spark, SEEN[:40]), "c0")
-    assert catalog.read_marker(ck.TABLE, "position-scheme") == ck.SCHEME
-    ck.update(urls_df(spark, SEEN[40:]), "c1")  # fold -> slot-layout blobs
-    assert ck.flag_maybe_seen(urls_df(spark, SEEN)) \
-        .filter(~F.col("maybe_seen")).count() == 0
-
-    os.remove(marker_path(catalog, ck.TABLE))
-    with pytest.raises(ValueError, match="predate the position-scheme marker"):
-        ck.flag_maybe_seen(urls_df(spark, SEEN)).count()
-
-    catalog.write_marker(ck.TABLE, "position-scheme", "cuckoo-slot-v1")
     with pytest.raises(ValueError, match="not portable across schemes"):
-        ck.update(urls_df(spark, NEW), "c2")
+        bloom.build(urls_df(spark, SEEN + NEW), "b1")
+

@@ -6,7 +6,10 @@ iteration; every data commit is idempotent by commit-id. So:
 - stopping between iterations and resuming re-reads the checkpoint;
 - crashing mid-iteration (some tables committed for iter k, crawl_state not)
   re-runs iteration k; already-present commits are skipped, counters are
-  recovered from the committed snapshots, and the state converges.
+  recovered from the committed snapshots, and the state converges;
+- that holds for the iteration where the seen-filter probe engages, too:
+  its build from the seen table is committed before the rest of the
+  iteration, and a resume finds it and does not build again.
 """
 
 from __future__ import annotations
@@ -21,13 +24,13 @@ from tests.conftest import engine_snapshot
 ITER_S = 4.0  # small per-host budget => the tiny fixture needs several iterations
 
 
-def make_engine(spark, fixture, wd):
+def make_engine(spark, fixture, wd, **cfg):
     return CrawlEngine(
         spark,
         pages=spark.read.parquet(fixture["pages"]),
         robots=spark.read.parquet(fixture["robots_rules"]),
         workdir=str(wd),
-        config=CrawlConfig(iteration_seconds=ITER_S, max_iterations=200),
+        config=CrawlConfig(iteration_seconds=ITER_S, max_iterations=200, **cfg),
     )
 
 
@@ -76,6 +79,39 @@ def test_resume_after_mid_iteration_crash(
     stats = eng2.resume()
     assert stats[0]["iteration"] == 3  # re-ran it idempotently
     assert stats[-1]["status"] == "complete"
+    assert engine_snapshot(eng2) == uninterrupted
+
+
+def test_resume_after_crash_past_the_probe_engagement_build(
+    spark, tiny_fixture, tmp_path_factory, uninterrupted
+):
+    wd = tmp_path_factory.mktemp("wd-engage")
+    seeds = spark.read.parquet(tiny_fixture["seeds"])
+    gate = 20  # between the 2 seeds and the 57 urls the tiny fixture sees
+    eng1 = make_engine(spark, tiny_fixture, wd, bloom_min_seen=gate)
+    eng1.run(seeds=seeds, max_iterations=1)
+    while not eng1.catalog.exists("seen_filters"):
+        assert eng1.last_state()["status"] == "running", "the probe never engaged"
+        eng1.run(max_iterations=1)
+    k = int(eng1.last_state()["iteration"])  # the first probed iteration
+    assert eng1.catalog.commits("seen_filters") == [f"bloom-iter-{k - 1}", f"bloom-iter-{k}"]
+
+    # crash right after the engagement build: of iteration k, only the
+    # build (committed as bloom-iter-{k-1}) survives
+    victims = 0
+    for table in os.listdir(str(wd)):
+        mdir = os.path.join(str(wd), table, "_manifests")
+        for m in os.listdir(mdir) if os.path.isdir(mdir) else []:
+            if m.endswith(f"-iter-{k}.json"):
+                os.remove(os.path.join(mdir, m))
+                victims += 1
+    assert victims >= 5
+
+    eng2 = make_engine(spark, tiny_fixture, wd, bloom_min_seen=gate)
+    assert int(eng2.last_state()["iteration"]) == k - 1
+    stats = eng2.resume()
+    assert stats[0]["iteration"] == k
+    assert eng2.catalog.commit_modes("seen_filters")[0] == (f"bloom-iter-{k - 1}", "overwrite")
     assert engine_snapshot(eng2) == uninterrupted
 
 

@@ -2,7 +2,7 @@
 
 What no regular test exercises at depth: long frontier delta/tombstone chains
 across MULTIPLE compactions, seen-filter LSM delta chains across
-``compact_every`` folds, and kill/resume deep into a crawl. Protocol:
+``compact_every`` rebuilds, and kill/resume deep into a crawl. Protocol:
 
 - 1.2M-page fixture (10x the sf0.1 bench crawl), all URLs seeded as a
   depth-0 frontier, ``global_cap`` throttled so draining takes 100+
