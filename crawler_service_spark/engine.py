@@ -9,7 +9,8 @@ Each iteration k is a pure DataFrame job over the snapshot of iteration k-1:
            available for arbitrary extractors) + drop html pre-checkpoint
         -> robots filter -> in-batch first-occurrence dedup
         -> bloom fast-path + exact anti-join vs seen
-        -> deterministic global seq assignment (distributed two-pass)
+        -> deterministic global seq assignment (range partitions pinned and
+           counted, then one JVM stamp expression re-read by every commit)
         -> commit pages_out / extraction_jobs / seen / seen filter (once the
            probe is engaged) / crawl_order /
            frontier_pending (DELTA: append new rows) / frontier_tombstones
@@ -47,6 +48,7 @@ from .operators import politeness, traps
 from .operators.dedup import BloomSeenFilter, anti_join_by_hash, dedup_new_urls
 from .operators.extraction import extract_hrefs, extract_text_col
 from .operators.grouping import emit_extraction_jobs
+from .operators.robots import DEFAULT_DELAY_S
 from .plans import with_global_seq
 from .storage import ManifestCatalog
 
@@ -70,10 +72,8 @@ STATE_SCHEMA = pa.schema(
 @dataclass
 class CrawlConfig:
     iteration_seconds: float = 30.0   # politeness budget window per iteration
-    default_delay_s: float = 1.0
     global_cap: int | None = None     # optional cap on urls scheduled/iteration
     salt_lanes: int = 8               # host-skew salting for the rank window
-    bloom_buckets: int = 64
     # engage the bloom PROBE only once the seen set is worth it; below this the
     # exact anti-join alone is cheaper than an extra Python stage (the probe
     # costs a cogroup pass over every candidate, and its definite-new/maybe
@@ -82,7 +82,6 @@ class CrawlConfig:
     # gate: the first probed iteration builds it from the seen snapshot, its
     # bits sized from that row count. None = exact anti-join only, always.
     bloom_min_seen: int | None = 2_000_000
-    emit_jobs: bool = True
     # F7 too-large-group skip (reference: '502' on huge dirs => skip + record,
     # crawlers/globus_base_preserved.py:294-297): families with more members
     # than this are dead-lettered (reason 'family_too_large') instead of
@@ -91,12 +90,12 @@ class CrawlConfig:
     # bound output files per commit (small-file compaction for control tables;
     # None = leave partitioning alone, the petabyte-scale default)
     commit_files: int | None = None
-    # eager=True materializes the two per-iteration checkpoints (fetched,
-    # new_frontier) in their own full-parallelism job before any consumer
-    # runs. With eager=False, the first two consumer jobs race to compute the
-    # same checkpoint partitions and serialize on block locks — cheaper for
-    # tiny iterations (one fewer job), but it caps parallelism on big
-    # batches. Large-frontier deployments should set True.
+    # eager=True materializes the two per-iteration checkpoints (the fetched
+    # pin and the dedup output ``new``) in their own full-parallelism job
+    # before any consumer runs. With eager=False, the first two consumer jobs
+    # race to compute the same checkpoint partitions and serialize on block
+    # locks — cheaper for tiny iterations (one fewer job), but it caps
+    # parallelism on big batches. Large-frontier deployments should set True.
     eager_checkpoints: bool = False
     # Frontier commits are INCREMENTAL: each iteration appends its new rows to
     # frontier_pending and its scheduled urls to frontier_tombstones, so
@@ -163,7 +162,7 @@ class CrawlEngine:
             self.pages.count()
         self.bloom = (
             None if self.config.bloom_min_seen is None
-            else BloomSeenFilter(self.catalog, n_buckets=self.config.bloom_buckets)
+            else BloomSeenFilter(self.catalog)
         )
 
     # ------------------------------------------------------------------ state
@@ -203,8 +202,9 @@ class CrawlEngine:
             F.lit(0).alias("depth"), F.lit(0).alias("priority"),
             "seq", F.lit(0).alias("discovered_iter"),
         )
-        frontier = frontier.localCheckpoint(eager=False)
-        # one action: the count that sizes the state, and the crawl id
+        # consumers re-evaluate the seq stamp (a column expression) off the
+        # blocks with_global_seq pinned, so the frontier needs no pin of its
+        # own. One action: the count that sizes the state, and the crawl id.
         n, crawl_id = frontier.agg(F.count(F.lit(1)), F.min("crawl_id")).collect()[0]
         self.catalog.commit("frontier_pending", frontier, "pending-iter-0", mode="overwrite")
         self.catalog.commit(
@@ -282,7 +282,7 @@ class CrawlEngine:
 
         scheduled = politeness.schedule(
             pending, self.budgets, cfg.iteration_seconds,
-            default_delay_s=cfg.default_delay_s,
+            default_delay_s=DEFAULT_DELAY_S,
             global_cap=cfg.global_cap, salt_lanes=cfg.salt_lanes,
         )
 
@@ -386,9 +386,10 @@ class CrawlEngine:
         # child, which would otherwise evaluate the whole candidate+dedup
         # pipeline a second time (measured as twin full-cost stages).
         new = new.localCheckpoint(eager=cfg.eager_checkpoints)
-        # with_global_seq pins its own partitioning (localCheckpoint inside);
-        # the stamp map is deterministic, so downstream branches may re-run it
-        # cheaply off those blocks — no second checkpoint needed.
+        # with_global_seq pins its own range partitions (localCheckpoint
+        # inside) and stamps seq as a JVM column expression over them, so
+        # every commit below re-evaluates the stamp off those blocks inside
+        # its own job — no post-stamp checkpoint, no extra job.
         new = with_global_seq(
             new,
             [F.col("_pd").asc(), F.col("_pnp").asc(), F.col("_ps").asc(), F.col("_li").asc()],
@@ -398,7 +399,7 @@ class CrawlEngine:
         new_frontier = new.select(
             *[c for c in FRONTIER_COLS if c != "discovered_iter"],
             F.lit(k).alias("discovered_iter"),
-        ).localCheckpoint(eager=cfg.eager_checkpoints)  # stamp map runs once, 4 consumers share
+        )
 
         # Frontier delta-commit vs compaction (decided from the PREVIOUS
         # state so the concurrent commits don't wait on each other's counts):
@@ -415,13 +416,13 @@ class CrawlEngine:
         )
 
         # ---- commits; counters observed on the write actions themselves.
-        # The eight table commits are mutually independent (all read the two
-        # pinned checkpoints), so they run as CONCURRENT Spark jobs — the
-        # wall cost is the slowest commit, not the sum. Only the crawl_state
-        # checkpoint row must come strictly last. Idempotence is per-table
-        # commit-id, so a crash anywhere in the concurrent batch still
-        # resumes exactly (partially-committed iterations re-run and skip
-        # finished commits).
+        # The eight table commits are mutually independent (all read the
+        # pinned fetched and seq-partition blocks), so they run as CONCURRENT
+        # Spark jobs — the wall cost is the slowest commit, not the sum. Only
+        # the crawl_state checkpoint row must come strictly last. Idempotence
+        # is per-table commit-id, so a crash anywhere in the concurrent batch
+        # still resumes exactly (partially-committed iterations re-run and
+        # skip finished commits).
         it = f"iter-{k}"
 
         def c_order():
@@ -447,8 +448,6 @@ class CrawlEngine:
             self.catalog.commit("fetch_failures", failures, f"fail-{it}", coalesce=cfg.commit_files)
 
         def c_jobs():
-            if not cfg.emit_jobs:
-                return {"n_fams": 0}
             jobs = emit_extraction_jobs(ok.select("crawl_id", "url", "seq", "size"), k)
             if cfg.max_family_files is not None:
                 oversize = F.size("files") > cfg.max_family_files

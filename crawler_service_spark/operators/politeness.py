@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .robots import DEFAULT_DELAY_S
+
+
 def order_cols() -> list:
     """Breadth-priority total order: (depth ASC, priority DESC, seq ASC)."""
     return [F.col("depth").asc(), F.col("priority").desc(), F.col("seq").asc()]
@@ -75,8 +78,6 @@ def host_budgets(robots: DataFrame, iteration_seconds: float) -> DataFrame:
     but hand-built frames may not) inherits the parser's
     ``DEFAULT_DELAY_S``: "no directive" means the crawler's own default
     pacing, NOT unthrottled — only an explicit <= 0 declaration is."""
-    from .robots import DEFAULT_DELAY_S
-
     delay = F.coalesce(F.col("crawl_delay_s"), F.lit(float(DEFAULT_DELAY_S)))
     return (
         robots.groupBy("host")
@@ -105,7 +106,7 @@ def schedule(
     pending: DataFrame,
     budgets: DataFrame,
     iteration_seconds: float,
-    default_delay_s: float = 1.0,
+    default_delay_s: float = DEFAULT_DELAY_S,
     global_cap: int | None = None,
     salt_lanes: int = 8,
 ) -> DataFrame:
