@@ -12,12 +12,13 @@ Each iteration k is a pure DataFrame job over the snapshot of iteration k-1:
         -> deterministic global seq assignment (range partitions pinned and
            counted, then one JVM stamp expression re-read by every commit)
         -> commit pages_out / extraction_jobs / seen / seen filter (once the
-           probe is engaged) / crawl_order /
-           frontier_pending (DELTA: append new rows) / frontier_tombstones
-           (append scheduled urls) / crawl_state  (crawl_state last = the
-           checkpoint; pending is reconstructed on read as appends ANTI
-           tombstones, compacted when garbage crosses the configured ratio —
-           per-iteration write bytes scale with the batch, never the frontier)
+           probe is engaged) / crawl_order (the scheduled rows) /
+           frontier_pending (DELTA: append new rows) / crawl_state
+           (crawl_state last = the checkpoint; pending is reconstructed on
+           read as appends ANTI crawl_order on the unique seq, compacted
+           when scheduled rows since the last compaction cross the
+           configured ratio — per-iteration write bytes scale with the
+           batch, never the frontier)
 
 All reads are snapshot-anchored (``upto=...-iter-{k-1}``) and all commits are
 idempotent by commit-id, so killing the job anywhere and calling ``resume()``
@@ -52,17 +53,28 @@ from .operators.robots import DEFAULT_DELAY_S
 from .plans import with_global_seq
 from .storage import ManifestCatalog
 
-FRONTIER_COLS = [
-    "crawl_id", "url", "url_hash", "host", "path",
-    "depth", "priority", "seq", "discovered_iter",
-]
+# table DDLs, declared once: expire's empty anchor commits are built from
+# them, and reads that may see only empty commits pass them as schema=
+FRONTIER_DDL = (
+    "crawl_id string, url string, url_hash bigint, host string, path string, "
+    "depth int, priority int, seq bigint, discovered_iter int"
+)
+FRONTIER_COLS = [c.split()[0] for c in FRONTIER_DDL.split(", ")]
+SEEN_DDL = (
+    "url_hash bigint, url string, host string, depth int, seq bigint, "
+    "discovered_iter int"
+)
+ORDER_DDL = (
+    "crawl_id string, iteration int, seq bigint, depth int, priority int, "
+    "url string, host string"
+)
 
 STATE_SCHEMA = pa.schema(
     [
         ("crawl_id", pa.string()), ("iteration", pa.int32()), ("status", pa.string()),
         ("scheduled", pa.int64()), ("fetched", pa.int64()), ("failed", pa.int64()),
         ("new_urls", pa.int64()), ("frontier_pending", pa.int64()),
-        ("tombstones", pa.int64()),  # garbage rows in the pending append chain
+        ("tombstones", pa.int64()),  # rows scheduled since the last compaction
         ("next_seq", pa.int64()), ("families", pa.int64()),
         ("bytes_crawled", pa.int64()), ("wall_ms", pa.int64()),
     ]
@@ -98,15 +110,16 @@ class CrawlConfig:
     # parallelism on big batches. Large-frontier deployments should set True.
     eager_checkpoints: bool = False
     # Frontier commits are INCREMENTAL: each iteration appends its new rows to
-    # frontier_pending and its scheduled urls to frontier_tombstones, so
-    # per-iteration write bytes scale with the BATCH, not the frontier (a
-    # 10^10-row frontier is never rewritten per iteration). Readers
-    # reconstruct pending = appends ANTI tombstones. When garbage reaches
-    # compact_ratio x live rows, that iteration's commits switch to a full
-    # overwrite (materialized pending + empty tombstones), bounding the read
-    # amplification at (1 + compact_ratio). 0 = compact every iteration
-    # (the round-1 full-rewrite behavior); raise it to trade read cost for
-    # fewer big writes.
+    # frontier_pending, so per-iteration write bytes scale with the BATCH,
+    # not the frontier (a 10^10-row frontier is never rewritten per
+    # iteration). crawl_order already records every scheduled row, so
+    # readers reconstruct pending = appends ANTI crawl_order on seq. When the
+    # rows scheduled since the last compaction reach compact_ratio x live
+    # rows, that iteration overwrites frontier_pending with the materialized
+    # live set, and later reads skip the crawl_order rows of iterations up to
+    # it, bounding the read amplification at (1 + compact_ratio).
+    # 0 = compact every iteration (the round-1 full-rewrite behavior); raise
+    # it to trade read cost for fewer big writes.
     frontier_compact_ratio: float = 1.0
     # Structural frontier defense (operators/traps.py): when on, every
     # iteration appends a (host, template, n) census of its NEW urls to the
@@ -234,18 +247,33 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------- pending view
-    def read_pending(self, upto_iter: int) -> DataFrame:
-        """Reconstruct the live frontier as of iteration ``upto_iter``:
-        pending appends minus scheduled-url tombstones (both snapshot-anchored
-        — see CrawlConfig.frontier_compact_ratio for the write side)."""
-        pending = self.catalog.read("frontier_pending", upto=f"pending-iter-{upto_iter}")
-        assert pending is not None, f"no pending snapshot for iteration {upto_iter}"
-        tombs = self.catalog.read("frontier_tombstones", upto=f"tomb-iter-{upto_iter}")
-        if tombs is None:
+    def read_pending(self, k: int) -> DataFrame:
+        """Reconstruct the live frontier as of iteration ``k``:
+        pending appends minus the rows crawl_order scheduled, both
+        snapshot-anchored (see CrawlConfig.frontier_compact_ratio for the
+        write side). seq is unique per pending row, so this is a plain int64
+        equi anti-join: a url re-entered with a fresh seq is live again."""
+        pending = self.catalog.read("frontier_pending", upto=f"pending-iter-{k}")
+        if pending is None:
+            raise RuntimeError(f"no pending snapshot for iteration {k}")
+        if k == 0:
             return pending
-        # int64-keyed anti-join (url equality residual): the per-iteration
-        # pending reconstruction never shuffles/sorts frontier-scale strings
-        return anti_join_by_hash(pending, tombs)
+        order = self.catalog.read("crawl_order", upto=f"order-iter-{k}", schema=ORDER_DDL)
+        if order is None:
+            raise RuntimeError(f"no crawl_order snapshot for iteration {k}")
+        # rows scheduled at or before the newest compaction in THIS snapshot
+        # are already gone from its overwrite (a crashed later compaction's
+        # overwrite lies past the snapshot and must not count)
+        compacted = 0
+        for commit_id, mode in self.catalog.commit_modes("frontier_pending"):
+            if mode == "overwrite":
+                compacted = int(commit_id.rsplit("-", 1)[1])
+            if commit_id == f"pending-iter-{k}":
+                break
+        scheduled = order.filter(F.col("iteration") > compacted).select(
+            F.col("seq").alias("__sched_seq")
+        )
+        return pending.join(scheduled, F.col("seq") == F.col("__sched_seq"), "left_anti")
 
     def _commit_observed(
         self, table: str, df: DataFrame, commit_id: str, metrics: dict,
@@ -403,12 +431,13 @@ class CrawlEngine:
 
         # Frontier delta-commit vs compaction (decided from the PREVIOUS
         # state so the concurrent commits don't wait on each other's counts):
-        # normally append only this iteration's new rows + tombstones; once
-        # accumulated garbage crosses the ratio, rewrite the materialized
-        # pending set and reset tombstones in the same commit slot.
+        # normally append only this iteration's new rows; once the rows
+        # scheduled since the last compaction cross the ratio, rewrite the
+        # materialized pending set, which read_pending then takes as the
+        # point before which crawl_order rows need no anti-join.
         compact = prev_tombs >= cfg.frontier_compact_ratio * max(prev_pending, 1)
         compacted_pending = (
-            anti_join_by_hash(pending, fetched.select("url_hash", "url"))
+            pending.join(fetched.select("seq"), "seq", "left_anti")
             .select(*FRONTIER_COLS)
             .unionByName(new_frontier.select(*FRONTIER_COLS))
             if compact
@@ -494,21 +523,6 @@ class CrawlEngine:
             )
             return None
 
-        def c_tomb():
-            if compact:
-                # repartition(1): an empty 0-partition write would emit no
-                # parquet footer and break schema inference on read
-                self.catalog.commit(
-                    "frontier_tombstones",
-                    self._empty("url_hash bigint, url string").repartition(1),
-                    f"tomb-{it}", mode="overwrite",
-                )
-            else:
-                self.catalog.commit(
-                    "frontier_tombstones", fetched.select("url_hash", "url"),
-                    f"tomb-{it}", coalesce=cfg.commit_files,
-                )
-
         def c_traps():
             if not cfg.trap_guard:
                 return
@@ -545,7 +559,7 @@ class CrawlEngine:
                 for name, fn in [
                     ("order", c_order), ("pages", c_pages), ("fail", c_fail),
                     ("jobs", c_jobs), ("seen", c_seen), ("bloom", c_bloom),
-                    ("pend", c_pend), ("tomb", c_tomb), ("traps", c_traps),
+                    ("pend", c_pend), ("traps", c_traps),
                 ]
             }
             m_order = futs["order"].result()
@@ -555,7 +569,6 @@ class CrawlEngine:
             m_pend = futs["pend"].result()
             futs["fail"].result()
             futs["bloom"].result()
-            futs["tomb"].result()
             futs["traps"].result()
         n_sched, n_ok = int(m_order["n_sched"]), int(m_pages["n_ok"])
         n_new = int(m_seen["n_new"])
@@ -649,13 +662,7 @@ class CrawlEngine:
             self.catalog.commit(
                 "frontier_pending", re_rows.select(*FRONTIER_COLS), f"pending-{it}"
             )
-            self.catalog.commit(
-                "seen", self._empty(
-                    "url_hash bigint, url string, host string, depth int, "
-                    "seq bigint, discovered_iter int"
-                ).repartition(1),
-                f"seen-{it}",
-            )
+            self.catalog.commit("seen", self._empty(SEEN_DDL).repartition(1), f"seen-{it}")
         else:  # forget
             kept = anti_join_by_hash(seen, ex.select("url_hash", "url"))
             self.catalog.commit("seen", kept, f"seen-{it}", mode="overwrite")
@@ -664,18 +671,10 @@ class CrawlEngine:
                 self.bloom.build(kept.select("url"), f"bloom-{it}")
         if mode == "forget":
             self.catalog.commit(
-                "frontier_pending",
-                self._empty(", ".join(
-                    f"{c} {'bigint' if c in ('url_hash', 'seq') else 'int' if c in ('depth', 'priority', 'discovered_iter') else 'string'}"
-                    for c in FRONTIER_COLS
-                )).repartition(1),
-                f"pending-{it}",
+                "frontier_pending", self._empty(FRONTIER_DDL).repartition(1), f"pending-{it}"
             )
-        self.catalog.commit(
-            "frontier_tombstones",
-            self._empty("url_hash bigint, url string").repartition(1),
-            f"tomb-{it}",
-        )
+        # nothing is scheduled, but read_pending(k) anchors on order-iter-{k}
+        self.catalog.commit("crawl_order", self._empty(ORDER_DDL).repartition(1), f"order-{it}")
         if self.config.trap_guard and self.catalog.exists("trap_stats"):
             if mode == "forget":
                 # keep the census additive: the forgotten urls leave the

@@ -25,31 +25,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import ORDER_DDL, SEEN_DDL
 from ..functions.urls import host_col
 from ..storage.catalog import ManifestCatalog
 
 # explicit schemas for every read: an expired/forgotten crawl overwrites
 # these tables with EMPTY commits (engine.py expire), which write no parquet
 # part files — a schema-less read in a fresh session would then die on
-# inference instead of reporting cleanly. DDLs mirror the engine's own
-# commit selects / _empty() strings.
-_SEEN_SCHEMA = (
-    "url_hash bigint, url string, host string, depth int, seq bigint, "
-    "discovered_iter int"
-)
-_ORDER_SCHEMA = (
-    "crawl_id string, iteration int, seq bigint, depth int, priority int, "
-    "url string, host string"
-)
+# inference instead of reporting cleanly.
 _FAIL_SCHEMA = "crawl_id string, iteration int, url string, reason string"
 
 
 def crawl_host_report(catalog: ManifestCatalog) -> DataFrame:
     """One row per host with discovery/scheduling/failure counts."""
-    seen = catalog.read("seen", schema=_SEEN_SCHEMA)
+    seen = catalog.read("seen", schema=SEEN_DDL)
     if seen is None:
         raise ValueError("no crawl in this catalog (empty 'seen' table)")
-    order = catalog.read("crawl_order", schema=_ORDER_SCHEMA)
+    order = catalog.read("crawl_order", schema=ORDER_DDL)
     fails = catalog.read("fetch_failures", schema=_FAIL_SCHEMA)
 
     disc = seen.groupBy("host").agg(F.count(F.lit(1)).alias("n_discovered"))

@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 class ManifestCatalog:
     """Thread-safety: manifest sequencing (read seq -> rename) is guarded by a
-    per-table lock, so the engine's concurrent per-iteration commits (7 threads,
-    engine.run_iteration) are safe even if two ever target the same table.
+    per-table lock, so the engine's concurrent per-iteration commits (one pool
+    thread per table, engine.run_iteration) are safe even if two ever target
+    the same table.
     Cross-PROCESS writers still need external coordination (real Iceberg uses
     the catalog's atomic swap for this)."""
 

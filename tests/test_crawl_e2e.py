@@ -174,22 +174,19 @@ def test_host_report_survives_empty_tables(spark, tmp_path):
     commits (no parquet part files) — the report must read them through its
     explicit schemas in a fresh session instead of dying on inference; a
     catalog with no crawl at all raises the documented ValueError."""
-    from crawler_service_spark.operators.reporting import (
-        _ORDER_SCHEMA,
-        _SEEN_SCHEMA,
-        crawl_host_report,
-    )
+    from crawler_service_spark.engine import ORDER_DDL, SEEN_DDL
+    from crawler_service_spark.operators.reporting import crawl_host_report
     from crawler_service_spark.storage import ManifestCatalog
 
     cat = ManifestCatalog(str(tmp_path / "wd"), spark)
     with pytest.raises(ValueError, match="no crawl"):
         crawl_host_report(cat)
     cat.commit(
-        "seen", spark.createDataFrame([], _SEEN_SCHEMA),
+        "seen", spark.createDataFrame([], SEEN_DDL),
         "seen-iter-0", mode="overwrite",
     )
     cat.commit(
-        "crawl_order", spark.createDataFrame([], _ORDER_SCHEMA),
+        "crawl_order", spark.createDataFrame([], ORDER_DDL),
         "order-iter-0", mode="overwrite",
     )
     # fresh instance: no cached schemas, the explicit DDLs must carry it
