@@ -99,8 +99,10 @@ class CrawlConfig:
     # than this are dead-lettered (reason 'family_too_large') instead of
     # emitted as extraction jobs. None = no cap.
     max_family_files: int | None = None
-    # bound output files per commit (small-file compaction for control tables;
-    # None = leave partitioning alone, the petabyte-scale default)
+    # upper bound on data files per table commit (small-file compaction):
+    # a commit writes at most this many files, fewer when it is small, since
+    # the catalog sizes them by bytes (ManifestCatalog.commit). None = leave
+    # partitioning alone, the petabyte-scale default
     commit_files: int | None = None
     # eager=True materializes the two per-iteration checkpoints (the fetched
     # pin and the dedup output ``new``) in their own full-parallelism job
@@ -233,7 +235,7 @@ class CrawlEngine:
             self.catalog.commit(
                 "trap_stats",
                 traps.template_delta(frontier.select("url")),
-                "traps-iter-0", coalesce=1,
+                "traps-iter-0", max_files=1,
             )
         self.catalog.commit_rows(
             "crawl_state",
@@ -277,15 +279,16 @@ class CrawlEngine:
 
     def _commit_observed(
         self, table: str, df: DataFrame, commit_id: str, metrics: dict,
-        mode: str = "append", coalesce: int | None = None,
+        mode: str = "append", max_files: int | None = None,
     ) -> dict:
         """Commit with counters observed ON the write action itself (no extra
-        count jobs — reference A3/A5 counters via ``df.observe``). Falls back
+        count jobs — reference A3/A5 counters via ``DataFrame.observe``, which
+        the catalog attaches above its file bound). Falls back
         to an aggregate over the committed snapshot on idempotent re-runs."""
         cols = [c.alias(n) for n, c in metrics.items()]
         obs = Observation()
         committed = self.catalog.commit(
-            table, df.observe(obs, *cols), commit_id, mode=mode, coalesce=coalesce
+            table, df, commit_id, mode=mode, max_files=max_files, observe=(obs, cols)
         )
         if committed:
             return {n: (v or 0) for n, v in obs.get.items()}
@@ -463,18 +466,20 @@ class CrawlEngine:
                 ),
                 f"order-{it}",
                 {"n_sched": F.count(F.lit(1))},
-                coalesce=cfg.commit_files,
+                max_files=cfg.commit_files,
             )
 
         def c_pages():
             return self._commit_observed(
                 "pages_out", pages_out, f"pages-{it}",
                 {"n_ok": F.count(F.lit(1)), "bytes": F.sum("size")},
-                coalesce=cfg.commit_files,
+                max_files=cfg.commit_files,
             )
 
         def c_fail():
-            self.catalog.commit("fetch_failures", failures, f"fail-{it}", coalesce=cfg.commit_files)
+            self.catalog.commit(
+                "fetch_failures", failures, f"fail-{it}", max_files=cfg.commit_files
+            )
 
         def c_jobs():
             jobs = emit_extraction_jobs(ok.select("crawl_id", "url", "seq", "size"), k)
@@ -486,12 +491,12 @@ class CrawlEngine:
                     F.lit("family_too_large").alias("reason"),
                 )
                 self.catalog.commit(
-                    "fetch_failures", dead, f"fail-fam-{it}", coalesce=cfg.commit_files
+                    "fetch_failures", dead, f"fail-fam-{it}", max_files=cfg.commit_files
                 )
                 jobs = jobs.filter(~oversize)
             return self._commit_observed(
                 "extraction_jobs", jobs, f"jobs-{it}", {"n_fams": F.count(F.lit(1))},
-                coalesce=cfg.commit_files,
+                max_files=cfg.commit_files,
             )
 
         def c_seen():
@@ -500,7 +505,7 @@ class CrawlEngine:
                 new_frontier.select("url_hash", "url", "host", "depth", "seq", "discovered_iter"),
                 f"seen-{it}",
                 {"n_new": F.count(F.lit(1))},
-                coalesce=cfg.commit_files,
+                max_files=cfg.commit_files,
             )
 
         def c_bloom():
@@ -515,11 +520,11 @@ class CrawlEngine:
                 return self._commit_observed(
                     "frontier_pending", compacted_pending, f"pending-{it}",
                     {"n_pending": F.count(F.lit(1))}, mode="overwrite",
-                    coalesce=cfg.commit_files,
+                    max_files=cfg.commit_files,
                 )
             self.catalog.commit(
                 "frontier_pending", new_frontier.select(*FRONTIER_COLS),
-                f"pending-{it}", coalesce=cfg.commit_files,
+                f"pending-{it}", max_files=cfg.commit_files,
             )
             return None
 
@@ -545,12 +550,12 @@ class CrawlEngine:
                 )
                 self.catalog.commit(
                     "trap_stats", rolled, f"traps-{it}",
-                    mode="overwrite", coalesce=1,
+                    mode="overwrite", max_files=1,
                 )
             else:
                 self.catalog.commit(
                     "trap_stats", delta, f"traps-{it}",
-                    coalesce=1,  # template-bounded tiny frame
+                    max_files=1,  # template-bounded tiny frame
                 )
 
         with ThreadPoolExecutor(max_workers=8) as pool:
@@ -684,7 +689,7 @@ class CrawlEngine:
                 neg = traps.template_delta(ex.select("url")).withColumn(
                     "n", -F.col("n")
                 )
-                self.catalog.commit("trap_stats", neg, f"traps-{it}", coalesce=1)
+                self.catalog.commit("trap_stats", neg, f"traps-{it}", max_files=1)
             else:
                 # recrawl keeps the urls in seen: counts are unchanged, but
                 # the pseudo-iteration still needs its snapshot anchor or

@@ -247,9 +247,9 @@ class BloomSeenFilter:
             )
 
         blobs = self._hashed(urls).groupBy("__bucket").applyInPandas(fold, schema=BLOB_SCHEMA)
-        # coalesce=1: <= n_buckets rows, and a single-partition write keeps a
+        # max_files=1: <= n_buckets rows, and a single-partition write keeps a
         # parquet footer even when the set is empty
-        self.catalog.commit(self.TABLE, blobs, commit_id, mode="overwrite", coalesce=1)
+        self.catalog.commit(self.TABLE, blobs, commit_id, mode="overwrite", max_files=1)
 
     def update(
         self, new_urls: DataFrame, commit_id: str, rebuild_from: DataFrame | None = None
@@ -279,8 +279,8 @@ class BloomSeenFilter:
             )
 
         deltas = self._hashed(new_urls).groupBy("__bucket").applyInPandas(pack, schema=BLOB_SCHEMA)
-        # coalesce=1: delta commits are <= n_buckets tiny rows (footer as above)
-        self.catalog.commit(self.TABLE, deltas, commit_id, coalesce=1)
+        # max_files=1: delta commits are <= n_buckets tiny rows (footer as above)
+        self.catalog.commit(self.TABLE, deltas, commit_id, max_files=1)
 
     # ------------------------------------------------------------------ probe
     def flag_maybe_seen(self, candidates: DataFrame, upto: str | None = None) -> DataFrame:

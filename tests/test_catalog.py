@@ -1,7 +1,10 @@
-"""ManifestCatalog: concurrent same-table commit safety and compaction."""
+"""ManifestCatalog: concurrent same-table commit safety, compaction and
+byte-sized file bounding."""
 
 from __future__ import annotations
 
+import glob
+import os
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -11,6 +14,12 @@ from crawler_service_spark.storage import ManifestCatalog
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _data_files(cat, table, commit_id):
+    return glob.glob(
+        os.path.join(cat.root, table, "data", commit_id, "**", "*.parquet"), recursive=True
+    )
 
 
 def test_concurrent_commits_same_table_never_lose_one(spark, tmp_path):
@@ -136,3 +145,66 @@ def test_drop_forgets_schema_for_recreate(spark, tmp_path):
         "t", spark.createDataFrame([("s", 2)], "name string, n long"), "c-0"
     )
     assert _rows(cat.read("t")) == [("s", 2)]
+
+
+def test_max_files_is_an_upper_bound_sized_by_bytes(spark, tmp_path):
+    """``max_files`` caps a commit's data files; it does not fix their count.
+    A small batch writes ONE file (a round-robin ``repartition(8)`` wrote 8,
+    in 8 tasks). A multi-MB frame stays within the cap even when adaptive
+    execution splits its rebalance partitions (forced here by a 256 KiB
+    advisory size, so the split happens at test scale), and the producing
+    stage still runs at its own width (a bare ``coalesce`` would collapse it
+    to ``max_files`` tasks)."""
+    cat = ManifestCatalog(str(tmp_path / "wd"), spark)
+    small = spark.range(0, 164, numPartitions=4).selectExpr(
+        "id AS k", "sha2(string(id), 256) AS v"
+    )
+    assert cat.commit("small", small, "c-0", max_files=8)
+    assert len(_data_files(cat, "small", "c-0")) == 1
+    assert cat.read("small").count() == 164
+
+    sc = spark.sparkContext
+    big = spark.range(0, 200_000, numPartitions=16).selectExpr(
+        "id AS k", "sha2(string(id), 256) AS v"
+    )
+    sc.setJobGroup("max-files-big", "bounded commit of a 16-partition frame")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
+    try:
+        assert cat.commit("big", big, "c-0", max_files=2)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(_data_files(cat, "big", "c-0")) <= 2
+    assert cat.read("big").count() == 200_000
+    tracker = sc.statusTracker()
+    stage_tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("max-files-big")
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    ]
+    assert max(stage_tasks) == 16, stage_tasks
+
+
+def test_max_files_commit_of_an_empty_frame_keeps_its_schema(spark, tmp_path):
+    """An empty bounded commit still writes one footer-only file, so a plain
+    read (no caller schema) recovers the schema. The Bloom-filter and
+    trap-census commits rely on this for batches that add nothing. Counters
+    observed on the write still arrive: adaptive execution drops the empty
+    rebalance stage, so the catalog observes above the file bound."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    cat = ManifestCatalog(str(tmp_path / "wd"), spark)
+    empty = spark.range(0, 100, numPartitions=4).selectExpr(
+        "id AS k", "string(id) AS v"
+    ).filter("k < 0")
+    obs = Observation()
+    assert cat.commit(
+        "e", empty, "c-0", max_files=1, observe=(obs, [F.count(F.lit(1)).alias("n")])
+    )
+    assert obs.get == {"n": 0}
+    assert len(_data_files(cat, "e", "c-0")) == 1
+    back = cat.read("e")
+    assert back.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert back.count() == 0

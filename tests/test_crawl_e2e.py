@@ -8,6 +8,8 @@ The three BASELINE.json correctness gates:
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -34,9 +36,11 @@ def engine_run(spark, small_fixture, tmp_path_factory):
         robots=spark.read.parquet(small_fixture["robots_rules"]),
         workdir=str(wd),
         # bloom_min_seen=0: exercise the bloom-probe fast path end-to-end even
-        # at test scale (production default engages it only at large seen sets)
+        # at test scale (production default engages it only at large seen sets);
+        # commit_files=8: the bounded commit path the benchmarks and soak run
         config=CrawlConfig(
-            iteration_seconds=ITER_S, global_cap=CAP, max_iterations=200, bloom_min_seen=0
+            iteration_seconds=ITER_S, global_cap=CAP, max_iterations=200, bloom_min_seen=0,
+            commit_files=8,
         ),
     )
     stats = eng.run(seeds=spark.read.parquet(small_fixture["seeds"]))
@@ -96,6 +100,28 @@ def test_counters_consistent(engine_run, oracle_result):
         eng.catalog.read("crawl_state").agg(F.sum("scheduled")).collect()[0][0]
     )
     assert total_sched == len(oracle_result.order)
+
+
+def test_small_iteration_commits_write_one_file(engine_run):
+    """``commit_files`` is an upper bound sized by bytes: on this fixture
+    every per-iteration table commit is a few hundred rows at most, so each
+    writes exactly one parquet data file, not ``commit_files`` of them."""
+    eng, stats = engine_run
+    assert len(stats) > 1
+    root = eng.catalog.root
+    for table in (
+        "crawl_order", "pages_out", "fetch_failures", "extraction_jobs", "seen",
+        "frontier_pending",
+    ):
+        # the iteration-0 commits come from seed(), which passes no bound
+        per_iter = [c for c in eng.catalog.commits(table) if not c.endswith("-iter-0")]
+        assert per_iter, table
+        for cid in per_iter:
+            files = [
+                f for f in os.listdir(os.path.join(root, table, "data", cid))
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (table, cid, files)
 
 
 def test_family_too_large_dead_letter(spark, tiny_fixture, tmp_path):
