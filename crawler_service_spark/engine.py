@@ -11,14 +11,13 @@ Each iteration k is a pure DataFrame job over the snapshot of iteration k-1:
         -> bloom fast-path + exact anti-join vs seen
         -> deterministic global seq assignment (range partitions pinned and
            counted, then one JVM stamp expression re-read by every commit)
-        -> commit pages_out / extraction_jobs / seen / seen filter (once the
-           probe is engaged) / crawl_order (the scheduled rows) /
-           frontier_pending (DELTA: append new rows) / crawl_state
-           (crawl_state last = the checkpoint; pending is reconstructed on
-           read as appends ANTI crawl_order on the unique seq, compacted
-           when scheduled rows since the last compaction cross the
-           configured ratio — per-iteration write bytes scale with the
-           batch, never the frontier)
+        -> commit pages_out / extraction_jobs / seen (the frontier's append
+           log) / seen filter (once the probe is engaged) / crawl_order (the
+           scheduled rows) / frontier_pending (an overwrite, on compacting
+           iterations only) / crawl_state (last = the checkpoint). Pending
+           is the newest pending overwrite plus the seen rows discovered
+           after it, ANTI crawl_order on the unique seq: per-iteration write
+           bytes scale with the batch, never the frontier
 
 All reads are snapshot-anchored (``upto=...-iter-{k-1}``) and all commits are
 idempotent by commit-id, so killing the job anywhere and calling ``resume()``
@@ -54,16 +53,13 @@ from .plans import with_global_seq
 from .storage import ManifestCatalog
 
 # table DDLs, declared once: expire's empty anchor commits are built from
-# them, and reads that may see only empty commits pass them as schema=
+# them, and reads that may see only empty commits pass them as schema=.
+# seen (the frontier's append log) and frontier_pending share FRONTIER_DDL
 FRONTIER_DDL = (
     "crawl_id string, url string, url_hash bigint, host string, path string, "
     "depth int, priority int, seq bigint, discovered_iter int"
 )
 FRONTIER_COLS = [c.split()[0] for c in FRONTIER_DDL.split(", ")]
-SEEN_DDL = (
-    "url_hash bigint, url string, host string, depth int, seq bigint, "
-    "discovered_iter int"
-)
 ORDER_DDL = (
     "crawl_id string, iteration int, seq bigint, depth int, priority int, "
     "url string, host string"
@@ -104,22 +100,23 @@ class CrawlConfig:
     # the catalog sizes them by bytes (ManifestCatalog.commit). None = leave
     # partitioning alone, the petabyte-scale default
     commit_files: int | None = None
-    # eager=True materializes the two per-iteration checkpoints (the fetched
-    # pin and the dedup output ``new``) in their own full-parallelism job
-    # before any consumer runs. With eager=False, the first two consumer jobs
-    # race to compute the same checkpoint partitions and serialize on block
-    # locks — cheaper for tiny iterations (one fewer job), but it caps
-    # parallelism on big batches. Large-frontier deployments should set True.
+    # eager=True materializes the dedup output ``new`` in its own
+    # full-parallelism job before any consumer runs (the fetched pin is
+    # always eager). With eager=False, the first two consumer jobs race to
+    # compute the same checkpoint partitions and serialize on block locks —
+    # cheaper for tiny iterations (one fewer job), but it caps parallelism on
+    # big batches. Large-frontier deployments should set True.
     eager_checkpoints: bool = False
-    # Frontier commits are INCREMENTAL: each iteration appends its new rows to
-    # frontier_pending, so per-iteration write bytes scale with the BATCH,
-    # not the frontier (a 10^10-row frontier is never rewritten per
-    # iteration). crawl_order already records every scheduled row, so
-    # readers reconstruct pending = appends ANTI crawl_order on seq. When the
-    # rows scheduled since the last compaction reach compact_ratio x live
-    # rows, that iteration overwrites frontier_pending with the materialized
-    # live set, and later reads skip the crawl_order rows of iterations up to
-    # it, bounding the read amplification at (1 + compact_ratio).
+    # Frontier commits are INCREMENTAL: each iteration's new rows are written
+    # once, to seen, so per-iteration write bytes scale with the BATCH, not
+    # the frontier (a 10^10-row frontier is never rewritten per iteration).
+    # crawl_order already records every scheduled row, so readers
+    # reconstruct pending = the newest frontier_pending overwrite plus the
+    # seen rows discovered after it, ANTI crawl_order on seq. When the rows
+    # scheduled since the last compaction reach compact_ratio x live rows,
+    # that iteration overwrites frontier_pending with the materialized live
+    # set, and later reads skip the seen and crawl_order rows of iterations
+    # up to it, bounding the read amplification at (1 + compact_ratio).
     # 0 = compact every iteration (the round-1 full-rewrite behavior); raise
     # it to trade read cost for fewer big writes.
     frontier_compact_ratio: float = 1.0
@@ -222,11 +219,7 @@ class CrawlEngine:
         # own. One action: the count that sizes the state, and the crawl id.
         n, crawl_id = frontier.agg(F.count(F.lit(1)), F.min("crawl_id")).collect()[0]
         self.catalog.commit("frontier_pending", frontier, "pending-iter-0", mode="overwrite")
-        self.catalog.commit(
-            "seen",
-            frontier.select("url_hash", "url", "host", "depth", "seq", "discovered_iter"),
-            "seen-iter-0",
-        )
+        self.catalog.commit("seen", frontier, "seen-iter-0")
         if self.config.trap_guard:
             # seeds enter the seen set too: census them at iteration 0 or a
             # seed list concentrated on one host never counts toward its
@@ -250,32 +243,36 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- pending view
     def read_pending(self, k: int) -> DataFrame:
-        """Reconstruct the live frontier as of iteration ``k``:
-        pending appends minus the rows crawl_order scheduled, both
+        """Reconstruct the live frontier as of iteration ``k``: the newest
+        frontier_pending overwrite ``c <= k`` plus the seen rows discovered
+        after it, minus the rows crawl_order scheduled after it, all
         snapshot-anchored (see CrawlConfig.frontier_compact_ratio for the
-        write side). seq is unique per pending row, so this is a plain int64
-        equi anti-join: a url re-entered with a fresh seq is live again."""
-        pending = self.catalog.read("frontier_pending", upto=f"pending-iter-{k}")
-        if pending is None:
+        write side). The seen tail is selected by ``discovered_iter``, not
+        by a commit range, so it survives a ``forget`` overwrite of seen.
+        seq is unique per pending row, so this is a plain int64 equi
+        anti-join: a url re-entered with a fresh seq is live again."""
+        # every frontier_pending commit is an overwrite, so the compaction
+        # point comes off the manifests alone (a crashed later compaction's
+        # overwrite lies past k and does not count)
+        iters = [int(cid.rsplit("-", 1)[1]) for cid in self.catalog.commits("frontier_pending")]
+        c = max((i for i in iters if i <= k), default=None)
+        if c is None:
             raise RuntimeError(f"no pending snapshot for iteration {k}")
-        if k == 0:
+        pending = self.catalog.read(
+            "frontier_pending", upto=f"pending-iter-{c}", schema=FRONTIER_DDL
+        )
+        if c == k:
             return pending
+        seen = self.catalog.read("seen", upto=f"seen-iter-{k}", schema=FRONTIER_DDL)
         order = self.catalog.read("crawl_order", upto=f"order-iter-{k}", schema=ORDER_DDL)
-        if order is None:
-            raise RuntimeError(f"no crawl_order snapshot for iteration {k}")
-        # rows scheduled at or before the newest compaction in THIS snapshot
-        # are already gone from its overwrite (a crashed later compaction's
-        # overwrite lies past the snapshot and must not count)
-        compacted = 0
-        for commit_id, mode in self.catalog.commit_modes("frontier_pending"):
-            if mode == "overwrite":
-                compacted = int(commit_id.rsplit("-", 1)[1])
-            if commit_id == f"pending-iter-{k}":
-                break
-        scheduled = order.filter(F.col("iteration") > compacted).select(
+        if seen is None or order is None:
+            raise RuntimeError(f"no seen/crawl_order snapshot for iteration {k}")
+        scheduled = order.filter(F.col("iteration") > c).select(
             F.col("seq").alias("__sched_seq")
         )
-        return pending.join(scheduled, F.col("seq") == F.col("__sched_seq"), "left_anti")
+        return pending.unionByName(seen.filter(F.col("discovered_iter") > c)).join(
+            scheduled, F.col("seq") == F.col("__sched_seq"), "left_anti"
+        )
 
     def _commit_observed(
         self, table: str, df: DataFrame, commit_id: str, metrics: dict,
@@ -304,7 +301,7 @@ class CrawlEngine:
         cfg = self.config
         prev = f"iter-{k - 1}"
         pending = self.read_pending(k - 1)
-        seen = self.catalog.read("seen", upto=f"seen-{prev}")
+        seen = self.catalog.read("seen", upto=f"seen-{prev}", schema=FRONTIER_DDL)
         st = self.last_state()
         next_seq = int(st["next_seq"])
         fam_seq = int(st["families"])  # cumulative family count (metrics only)
@@ -324,6 +321,8 @@ class CrawlEngine:
         # the (heavy) html column is dropped: at ~12 KiB/page the html is
         # >90% of the checkpoint bytes but no consumer needs it post-extract —
         # this is the single biggest lever on the per-iteration I/O floor.
+        # eager in both modes: a lazy pin would be finished inside whichever
+        # concurrent commit job below ends first (a compacting iteration hung)
         fetched = (
             scheduled.join(self.pages.drop("text", "warc_ts"), on="url", how="left")
             .withColumn("fetch_ok", F.col("html").isNotNull())
@@ -331,7 +330,7 @@ class CrawlEngine:
             .withColumn("text", extract_text_col(F.col("html")))
             .withColumn("hrefs", extract_hrefs(F.col("html")))
             .drop("html")
-            .localCheckpoint(eager=cfg.eager_checkpoints)  # consumers read blocks
+            .localCheckpoint(eager=True)  # consumers read blocks
         )
         ok = fetched.filter(F.col("fetch_ok"))
         failures = fetched.filter(~F.col("fetch_ok")).select(
@@ -432,12 +431,12 @@ class CrawlEngine:
             F.lit(k).alias("discovered_iter"),
         )
 
-        # Frontier delta-commit vs compaction (decided from the PREVIOUS
-        # state so the concurrent commits don't wait on each other's counts):
-        # normally append only this iteration's new rows; once the rows
-        # scheduled since the last compaction cross the ratio, rewrite the
-        # materialized pending set, which read_pending then takes as the
-        # point before which crawl_order rows need no anti-join.
+        # Frontier compaction (decided from the PREVIOUS state so the
+        # concurrent commits don't wait on each other's counts): once the
+        # rows scheduled since the last compaction cross the ratio, overwrite
+        # frontier_pending with the materialized pending set, which
+        # read_pending then takes as the point before which seen and
+        # crawl_order rows need no reading.
         compact = prev_tombs >= cfg.frontier_compact_ratio * max(prev_pending, 1)
         compacted_pending = (
             pending.join(fetched.select("seq"), "seq", "left_anti")
@@ -502,7 +501,7 @@ class CrawlEngine:
         def c_seen():
             return self._commit_observed(
                 "seen",
-                new_frontier.select("url_hash", "url", "host", "depth", "seq", "discovered_iter"),
+                new_frontier,
                 f"seen-{it}",
                 {"n_new": F.count(F.lit(1))},
                 max_files=cfg.commit_files,
@@ -516,17 +515,13 @@ class CrawlEngine:
                 )
 
         def c_pend():
-            if compact:
-                return self._commit_observed(
-                    "frontier_pending", compacted_pending, f"pending-{it}",
-                    {"n_pending": F.count(F.lit(1))}, mode="overwrite",
-                    max_files=cfg.commit_files,
-                )
-            self.catalog.commit(
-                "frontier_pending", new_frontier.select(*FRONTIER_COLS),
-                f"pending-{it}", max_files=cfg.commit_files,
+            if not compact:
+                return None
+            return self._commit_observed(
+                "frontier_pending", compacted_pending, f"pending-{it}",
+                {"n_pending": F.count(F.lit(1))}, mode="overwrite",
+                max_files=cfg.commit_files,
             )
-            return None
 
         def c_traps():
             if not cfg.trap_guard:
@@ -578,8 +573,8 @@ class CrawlEngine:
         n_sched, n_ok = int(m_order["n_sched"]), int(m_pages["n_ok"])
         n_new = int(m_seen["n_new"])
         # live pending is exact arithmetic (scheduled rows always come from
-        # pending; new rows are deduped against seen which contains every
-        # pending row ever appended); the compaction write double-checks it
+        # pending; new rows are deduped against seen, which holds every url
+        # that ever entered the frontier); the compaction write double-checks it
         if compact:
             n_pending, n_tombs = int(m_pend["n_pending"]), 0
             assert n_pending == prev_pending - n_sched + n_new, (
@@ -625,6 +620,10 @@ class CrawlEngine:
           future page links to it, admitted exactly once by the standard
           dedup invariant.
 
+        Both modes overwrite frontier_pending with the live frontier (plus
+        recrawl's re-entered rows): rows still pending stay pending even
+        when forget deletes their seen rows, the log read_pending reads.
+
         Recrawl changes no seen row and writes no filter commit; the next
         probed iteration finds no ``bloom-iter-{k}`` and builds one from the
         seen table, as at engagement.
@@ -639,7 +638,7 @@ class CrawlEngine:
         prev = f"iter-{k - 1}"
         next_seq = int(st["next_seq"])
         prev_pending = int(st["frontier_pending"])
-        seen = self.catalog.read("seen", upto=f"seen-{prev}")
+        seen = self.catalog.read("seen", upto=f"seen-{prev}", schema=FRONTIER_DDL)
         ex = (
             urls.select(canonicalize_url_col("url").alias("url"))
             .dropDuplicates(["url"])
@@ -653,6 +652,7 @@ class CrawlEngine:
         ).localCheckpoint(eager=False)
         n_ex = ex.count()  # admin API: one small driver count is fine
 
+        pending = self.read_pending(k - 1)
         if mode == "recrawl":
             re_rows = ex.select(
                 F.lit(str(st["crawl_id"])).alias("crawl_id"),
@@ -664,20 +664,15 @@ class CrawlEngine:
                 re_rows, [F.col("url").asc()], seq_col="seq", start=next_seq
             ).withColumn("discovered_iter", F.lit(k))
             n_exp = n_ex
-            self.catalog.commit(
-                "frontier_pending", re_rows.select(*FRONTIER_COLS), f"pending-{it}"
-            )
-            self.catalog.commit("seen", self._empty(SEEN_DDL).repartition(1), f"seen-{it}")
+            pending = pending.unionByName(re_rows.select(*FRONTIER_COLS))
+            self.catalog.commit("seen", self._empty(FRONTIER_DDL).repartition(1), f"seen-{it}")
         else:  # forget
             kept = anti_join_by_hash(seen, ex.select("url_hash", "url"))
             self.catalog.commit("seen", kept, f"seen-{it}", mode="overwrite")
             n_exp = 0  # forget adds nothing to pending
             if self._probing(next_seq):
                 self.bloom.build(kept.select("url"), f"bloom-{it}")
-        if mode == "forget":
-            self.catalog.commit(
-                "frontier_pending", self._empty(FRONTIER_DDL).repartition(1), f"pending-{it}"
-            )
+        self.catalog.commit("frontier_pending", pending, f"pending-{it}", mode="overwrite")
         # nothing is scheduled, but read_pending(k) anchors on order-iter-{k}
         self.catalog.commit("crawl_order", self._empty(ORDER_DDL).repartition(1), f"order-{it}")
         if self.config.trap_guard and self.catalog.exists("trap_stats"):
@@ -707,8 +702,7 @@ class CrawlEngine:
                 crawl_id=str(st["crawl_id"]), iteration=k,
                 status="running" if n_pending > 0 else str(st["status"]),
                 scheduled=0, fetched=0, failed=0, new_urls=0,
-                frontier_pending=n_pending,
-                tombstones=int(st.get("tombstones") or 0),
+                frontier_pending=n_pending, tombstones=0,
                 next_seq=next_seq + n_exp, families=int(st["families"]),
                 bytes_crawled=0, wall_ms=0,
             )],

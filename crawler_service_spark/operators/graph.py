@@ -266,17 +266,17 @@ def star_forest_labels(
     universe, union+distinct over both endpoints, component rollup and a
     left join back — was three extra corpus-of-pairs passes spent
     re-deriving rows the forest already holds (round 6). Self-loop-only
-    nodes (singletons) are the ONLY rows the full labeling adds."""
+    nodes (singletons) are the ONLY rows the full labeling adds. One row
+    per node, its min over both halves: a non-forest E (convergence by
+    the signature safety net) still labels every node once."""
     _, E = _star_forest(
         edges, src=src, dst=dst, max_rounds=max_rounds, pin_input=False
     )
-    # only the parent half needs a distinct: the child rows (a, b) are
-    # already unique (E is distinct and, at convergence, each child has
-    # exactly one parent) and disjoint from the parent rows (no node is
-    # both child and parent), so deduping before the union shuffles
-    # |E| parent rows instead of the whole 2|E| labeling
-    return E.select(F.col("a").alias("node"), F.col("b").alias("component")).union(
-        E.select(F.col("b").alias("node"), F.col("b").alias("component")).distinct()
+    return (
+        E.select(F.col("a").alias("node"), F.col("b").alias("component"))
+        .union(E.select(F.col("b").alias("node"), F.col("b").alias("component")))
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
     )
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import ORDER_DDL, SEEN_DDL
+from ..engine import FRONTIER_DDL, ORDER_DDL
 from ..functions.urls import host_col
 from ..storage.catalog import ManifestCatalog
 
@@ -38,7 +38,7 @@ _FAIL_SCHEMA = "crawl_id string, iteration int, url string, reason string"
 
 def crawl_host_report(catalog: ManifestCatalog) -> DataFrame:
     """One row per host with discovery/scheduling/failure counts."""
-    seen = catalog.read("seen", schema=SEEN_DDL)
+    seen = catalog.read("seen", schema=FRONTIER_DDL)
     if seen is None:
         raise ValueError("no crawl in this catalog (empty 'seen' table)")
     order = catalog.read("crawl_order", schema=ORDER_DDL)

@@ -61,4 +61,9 @@ def with_global_seq(
         acc += counts.get(pid, 0)
     local = F.monotonically_increasing_id().bitwiseAND(F.lit(_LOCAL_MASK))
     offset = F.array(*[F.lit(o).cast("long") for o in offsets])[F.col(_PID)]
-    return part.withColumn(seq_col, offset + local).drop(_PID)
+    out = part.withColumn(seq_col, offset + local).drop(_PID)
+    if not counts:
+        # no result job ran over the pin (the count came from an empty
+        # relation) to finish it before its consumers: hand back no lineage
+        return df.sparkSession.createDataFrame([], out.schema)
+    return out

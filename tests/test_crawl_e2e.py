@@ -105,7 +105,8 @@ def test_counters_consistent(engine_run, oracle_result):
 def test_small_iteration_commits_write_one_file(engine_run):
     """``commit_files`` is an upper bound sized by bytes: on this fixture
     every per-iteration table commit is a few hundred rows at most, so each
-    writes exactly one parquet data file, not ``commit_files`` of them."""
+    writes exactly one parquet data file, not ``commit_files`` of them.
+    frontier_pending's per-iteration commits are its compaction overwrites."""
     eng, stats = engine_run
     assert len(stats) > 1
     root = eng.catalog.root
@@ -122,6 +123,72 @@ def test_small_iteration_commits_write_one_file(engine_run):
                 if f.endswith(".parquet")
             ]
             assert len(files) == 1, (table, cid, files)
+
+
+def test_commit_jobs_read_only_finished_checkpoints(spark, tiny_fixture, tmp_path, monkeypatch):
+    """The per-iteration commits run as concurrent Spark jobs. A lazy
+    ``localCheckpoint`` they read is finished (marked checkpointed) inside
+    whichever of those jobs ends first, while the scheduler still plans the
+    others over the same RDD; a suite run hung in that window. So every
+    checkpoint a commit reads must be finished before the commits start.
+    Here the commits run one at a time, each checked before it writes, so
+    no earlier commit can finish a checkpoint for a later one. Compacting
+    every iteration with the probe engaged puts the most commits on the
+    checkpoints; the last iteration has no new urls."""
+    from concurrent.futures import Future
+
+    from crawler_service_spark import engine as engine_mod
+    from crawler_service_spark.storage import ManifestCatalog
+
+    in_pool, checked, unfinished = [False], [], []
+
+    class SerialPool:
+        def __init__(self, max_workers=None):
+            pass
+
+        def __enter__(self):
+            in_pool[0] = True
+            return self
+
+        def __exit__(self, *exc):
+            in_pool[0] = False
+
+        def submit(self, fn):
+            fut = Future()
+            try:
+                fut.set_result(fn())
+            except BaseException as e:  # noqa: BLE001 - re-raised by result()
+                fut.set_exception(e)
+            return fut
+
+    real_commit = ManifestCatalog.commit
+
+    def checked_commit(self, table, df, commit_id, *args, **kwargs):
+        if in_pool[0]:
+            checked.append(commit_id)
+            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                if leaf.getClass().getSimpleName() != "LogicalRDD":
+                    continue
+                rdd = leaf.rdd()  # marked for checkpointing, not yet finished
+                if rdd.checkpointData().isDefined() and not rdd.isCheckpointed():
+                    unfinished.append(commit_id)
+        return real_commit(self, table, df, commit_id, *args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "ThreadPoolExecutor", SerialPool)
+    monkeypatch.setattr(ManifestCatalog, "commit", checked_commit)
+    eng = CrawlEngine(
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        spark.read.parquet(tiny_fixture["robots_rules"]),
+        str(tmp_path / "wd"),
+        CrawlConfig(iteration_seconds=60.0, frontier_compact_ratio=0, bloom_min_seen=0),
+    )
+    stats = eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
+    assert stats[-1]["status"] == "complete" and stats[-1]["new_urls"] == 0
+    assert any(c.startswith("pending-") for c in checked), checked
+    assert unfinished == []
 
 
 def test_family_too_large_dead_letter(spark, tiny_fixture, tmp_path):
@@ -200,7 +267,7 @@ def test_host_report_survives_empty_tables(spark, tmp_path):
     commits (no parquet part files) — the report must read them through its
     explicit schemas in a fresh session instead of dying on inference; a
     catalog with no crawl at all raises the documented ValueError."""
-    from crawler_service_spark.engine import ORDER_DDL, SEEN_DDL
+    from crawler_service_spark.engine import FRONTIER_DDL, ORDER_DDL
     from crawler_service_spark.operators.reporting import crawl_host_report
     from crawler_service_spark.storage import ManifestCatalog
 
@@ -208,7 +275,7 @@ def test_host_report_survives_empty_tables(spark, tmp_path):
     with pytest.raises(ValueError, match="no crawl"):
         crawl_host_report(cat)
     cat.commit(
-        "seen", spark.createDataFrame([], SEEN_DDL),
+        "seen", spark.createDataFrame([], FRONTIER_DDL),
         "seen-iter-0", mode="overwrite",
     )
     cat.commit(

@@ -113,6 +113,35 @@ def test_expire_forget_readmits_exactly_once(spark, tiny_fixture, tmp_path):
     assert sorted(r["url"] for r in admitted.collect()) == expired
 
 
+def test_expire_forget_keeps_live_frontier(spark, tiny_fixture, tmp_path):
+    """Forgetting urls that are still pending deletes their seen rows, the
+    log read_pending takes new pending rows from: the pending overwrite
+    must keep them live, and resume must still schedule them."""
+    eng = _build(spark, tiny_fixture, tmp_path / "live")
+    eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]), max_iterations=1)
+    st = eng.last_state()
+    k = int(st["iteration"])
+    assert st["status"] == "running"
+    live = sorted((r["url"], r["seq"]) for r in eng.read_pending(k).collect())
+    assert len(live) >= 3
+    forgotten = [u for u, _seq in live[:3]]
+
+    res = eng.expire(
+        spark.createDataFrame([(u,) for u in forgotten], "url string"), mode="forget"
+    )
+    assert res["expired"] == 3 and res["pending"] == int(st["frontier_pending"])
+    assert sorted((r["url"], r["seq"]) for r in eng.read_pending(k + 1).collect()) == live
+
+    # a drifted frontier would trip the compaction's accounting assert
+    stats = eng.resume()
+    assert stats[-1]["status"] == "complete"
+    after = {
+        r["url"]
+        for r in eng.catalog.read("crawl_order").filter(F.col("iteration") > k + 1).collect()
+    }
+    assert set(forgotten) <= after
+
+
 def test_expire_unknown_urls_ignored(spark, tiny_fixture, tmp_path):
     eng = _build(spark, tiny_fixture, tmp_path / "unk", bloom_min_seen=0)
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))

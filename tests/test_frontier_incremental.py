@@ -1,7 +1,10 @@
-"""Incremental frontier commits: per-iteration write volume must scale with
-the iteration batch (never the frontier), pending must be reconstructed from
-crawl_order alone, compaction must be equivalence-preserving, and resume
-must work across the delta/compact boundary."""
+"""Incremental frontier commits: each iteration's new rows are written once,
+to seen, so per-iteration write volume scales with the iteration batch
+(never the frontier); frontier_pending holds only compaction overwrites;
+pending must be reconstructed from the newest overwrite, the seen rows
+discovered after it and crawl_order alone; compaction must be
+equivalence-preserving, and resume must work across the delta/compact
+boundary."""
 
 from __future__ import annotations
 
@@ -25,13 +28,15 @@ def _engine(spark, paths, wd, **cfg) -> CrawlEngine:
     )
 
 
-def _pending_anti_join(df) -> tuple[int, str]:
-    """(iteration bound, join condition) of read_pending's anti-join."""
+def _pending_anti_join(df) -> tuple[int, int, str]:
+    """(seen tail bound, crawl_order bound, join condition) of
+    read_pending's anti-join."""
     plan = df._jdf.queryExecution().optimizedPlan().toString()
+    tail = re.search(r"\(discovered_iter#\d+ > (\d+)\)", plan)
     bound = re.search(r"\(iteration#\d+ > (\d+)\)", plan)
     cond = re.search(r"Join LeftAnti, \((.*)\)", plan)
-    assert bound and cond, plan
-    return int(bound.group(1)), cond.group(1)
+    assert tail and bound and cond, plan
+    return int(tail.group(1)), int(bound.group(1)), cond.group(1)
 
 
 def test_delta_commits_scale_with_batch_not_frontier(spark, small_fixture, tmp_path):
@@ -48,25 +53,30 @@ def test_delta_commits_scale_with_batch_not_frontier(spark, small_fixture, tmp_p
     compactions, last_compaction = 0, 0
     for s in stats:
         k = s["iteration"]
-        if k > 1:
-            # read_pending(k-1) subtracts only the crawl_order rows scheduled
-            # after the last compaction, keyed on seq alone
-            bound, cond = _pending_anti_join(eng.read_pending(k - 1))
-            assert bound == last_compaction, (k, bound, last_compaction)
+        if k - 1 > last_compaction:
+            # read_pending(k-1) takes the seen rows discovered, and subtracts
+            # the crawl_order rows scheduled, after the last compaction,
+            # keyed on seq alone (at k-1 == last compaction it is the bare
+            # overwrite)
+            tail, bound, cond = _pending_anti_join(eng.read_pending(k - 1))
+            assert tail == bound == last_compaction, (k, tail, bound, last_compaction)
             assert re.fullmatch(r"seq#\d+L? = __sched_seq#\d+L?", cond), cond
 
-        commit = eng.catalog.read_commit("frontier_pending", f"pending-iter-{k}")
         st = eng.catalog.read_commit("crawl_state", f"state-iter-{k}").collect()[0]
         if int(st["tombstones"]) == 0 and k > 1:
             compactions += 1
             last_compaction = k
             # compaction iteration: the write is the materialized live set
+            commit = eng.catalog.read_commit("frontier_pending", f"pending-iter-{k}")
             assert commit.count() == int(st["frontier_pending"])
         else:
-            # delta iteration: the write is ONLY this iteration's new rows
-            assert commit.count() == s["new_urls"], (
-                f"iteration {k} wrote {commit.count()} rows, batch was {s['new_urls']}"
-            )
+            # delta iteration: frontier_pending is not written at all
+            assert not eng.catalog.has_commit("frontier_pending", f"pending-iter-{k}"), k
+        # the new rows are written once, to seen: only this iteration's batch
+        new = eng.catalog.read_commit("seen", f"seen-iter-{k}")
+        assert new.count() == s["new_urls"], (
+            f"iteration {k} wrote {new.count()} seen rows, batch was {s['new_urls']}"
+        )
         # the scheduled record is only this iteration's batch
         order = eng.catalog.read_commit("crawl_order", f"order-iter-{k}")
         assert order.count() == s["scheduled"]

@@ -193,3 +193,19 @@ def test_star_forest_labels_match_full_cc_on_multi_member_components(spark):
     assert forest == {(n, 10) for n in range(10, 16)} | {(30, 30), (31, 30)}
     # the singleton (self-loop node) is exactly what the forest view drops
     assert (40, 40) in full and all(n != 40 for n, _ in forest)
+
+
+def test_star_forest_labels_one_label_per_node_on_a_non_forest(spark, monkeypatch):
+    """If the loop stops on a non-forest edge set (the signature safety net
+    fires before every child points at its component's minimum), a node
+    may be both child and parent, or a child of two parents: each node
+    must still get exactly one label, the least component it reaches."""
+    from crawler_service_spark.operators import graph
+
+    E = spark.createDataFrame([(3, 1), (3, 2), (2, 1), (5, 4)], "a long, b long")
+    monkeypatch.setattr(graph, "_star_forest", lambda edges, **kw: (edges, E))
+    got = sorted(
+        (r["node"], r["component"])
+        for r in graph.star_forest_labels(E.toDF("src", "dst")).collect()
+    )
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)]

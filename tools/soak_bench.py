@@ -1,7 +1,8 @@
 """sf1 soak of the crawl loop (VERDICT r3 item 7).
 
-What no regular test exercises at depth: long frontier delta chains (pending
-appends, reconstructed as appends ANTI crawl_order on seq) across MULTIPLE
+What no regular test exercises at depth: long frontier delta chains (the
+seen rows discovered since the last pending overwrite, reconstructed as
+overwrite + seen tail ANTI crawl_order on seq) across MULTIPLE
 compactions, seen-filter LSM delta chains across
 ``compact_every`` rebuilds, and kill/resume deep into a crawl. Protocol:
 
