@@ -9,8 +9,8 @@ A from-scratch reimplementation of the *capabilities* of xtracthub/crawler-servi
 - its thread/batch throttling (8 crawl threads, SQS batches of 10;
   crawlers/globus_base_preserved.py:23,139) becomes a per-host politeness window
   (``row_number().over(Window.partitionBy('host').orderBy(...))``);
-- its per-family dedup set (crawlers/globus_base_preserved.py:396-403) becomes a
-  partitioned-Bloom-accelerated exact anti-join URL-seen set;
+- its per-family dedup set (crawlers/globus_base_preserved.py:396-403) becomes an
+  exact int64 anti-join against a hash-partitioned URL-seen table;
 - its family/extraction-job SQS envelopes (crawlers/globus_base_preserved.py:360-409)
   become byte-stable JSON rows in an ``extraction_jobs`` table.
 

@@ -8,16 +8,15 @@ Each iteration k is a pure DataFrame job over the snapshot of iteration k-1:
         -> extract text + outlinks (JVM regexp, byte-exact; pandas-UDF seam
            available for arbitrary extractors) + drop html pre-checkpoint
         -> robots filter -> in-batch first-occurrence dedup
-        -> bloom fast-path + exact anti-join vs seen
+        -> exact int64 anti-join vs seen (the one dedup path)
         -> deterministic global seq assignment (range partitions pinned and
            counted, then one JVM stamp expression re-read by every commit)
         -> commit pages_out / extraction_jobs / seen (the frontier's append
-           log) / seen filter (once the probe is engaged) / crawl_order (the
-           scheduled rows) / frontier_pending (an overwrite, on compacting
-           iterations only) / crawl_state (last = the checkpoint). Pending
-           is the newest pending overwrite plus the seen rows discovered
-           after it, ANTI crawl_order on the unique seq: per-iteration write
-           bytes scale with the batch, never the frontier
+           log) / crawl_order (the scheduled rows) / frontier_pending (an
+           overwrite, on compacting iterations only) / crawl_state (last =
+           the checkpoint). Pending is the newest pending overwrite plus the
+           seen rows discovered after it, ANTI crawl_order on the unique seq:
+           per-iteration write bytes scale with the batch, never the frontier
 
 All reads are snapshot-anchored (``upto=...-iter-{k-1}``) and all commits are
 idempotent by commit-id, so killing the job anywhere and calling ``resume()``
@@ -45,7 +44,7 @@ from pyspark.sql import functions as F
 
 from .functions.urls import canonicalize_url_col, host_col, path_col, url_hash_col
 from .operators import politeness, traps
-from .operators.dedup import BloomSeenFilter, anti_join_by_hash, dedup_new_urls
+from .operators.dedup import anti_join_by_hash, dedup_new_urls
 from .operators.extraction import extract_hrefs, extract_text_col
 from .operators.grouping import emit_extraction_jobs
 from .operators.robots import DEFAULT_DELAY_S
@@ -65,6 +64,9 @@ ORDER_DDL = (
     "url string, host string"
 )
 
+# crawl_state marker naming the pseudo-iteration an expire() is writing
+_EXPIRING = "expiring"
+
 STATE_SCHEMA = pa.schema(
     [
         ("crawl_id", pa.string()), ("iteration", pa.int32()), ("status", pa.string()),
@@ -82,14 +84,6 @@ class CrawlConfig:
     iteration_seconds: float = 30.0   # politeness budget window per iteration
     global_cap: int | None = None     # optional cap on urls scheduled/iteration
     salt_lanes: int = 8               # host-skew salting for the rank window
-    # engage the bloom PROBE only once the seen set is worth it; below this the
-    # exact anti-join alone is cheaper than an extra Python stage (the probe
-    # costs a cogroup pass over every candidate, and its definite-new/maybe
-    # union split duplicates the candidate pipeline because exchange reuse
-    # does not cross the Python cogroup node). No filter exists below the
-    # gate: the first probed iteration builds it from the seen snapshot, its
-    # bits sized from that row count. None = exact anti-join only, always.
-    bloom_min_seen: int | None = 2_000_000
     # F7 too-large-group skip (reference: '502' on huge dirs => skip + record,
     # crawlers/globus_base_preserved.py:294-297): families with more members
     # than this are dead-lettered (reason 'family_too_large') instead of
@@ -172,10 +166,6 @@ class CrawlEngine:
             # front (in production this partitioning pre-exists as Iceberg
             # bucketing — it must not be re-paid inside every iteration)
             self.pages.count()
-        self.bloom = (
-            None if self.config.bloom_min_seen is None
-            else BloomSeenFilter(self.catalog)
-        )
 
     # ------------------------------------------------------------------ state
     def last_state(self) -> dict | None:
@@ -184,11 +174,6 @@ class CrawlEngine:
 
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
-
-    def _probing(self, next_seq: int) -> bool:
-        """Whether an iteration whose previous state has ``next_seq`` (the
-        seen-set size) probes the filter; monotone, as next_seq only grows."""
-        return self.bloom is not None and next_seq >= self.config.bloom_min_seen
 
     # ------------------------------------------------------------------- seed
     def seed(self, seeds: DataFrame) -> None:
@@ -394,17 +379,7 @@ class CrawlEngine:
                     deltas, cfg.trap_ratio_permille, cfg.trap_min_urls
                 )
                 firsts = firsts.join(F.broadcast(flagged), "host", "left_anti")
-        probe = self._probing(next_seq)
-        if probe:
-            # engagement: the first probed iteration builds the filter from
-            # the seen snapshot it probes against. Idempotent by commit id, so
-            # later iterations (whose previous one committed bloom-{prev})
-            # and resumes skip it.
-            self.bloom.build(seen.select("url"), f"bloom-{prev}")
-        new = dedup_new_urls(
-            firsts, seen, self.bloom if probe else None, bloom_upto=f"bloom-{prev}"
-        )
-        new = new.select(
+        new = dedup_new_urls(firsts, seen).select(
             "crawl_id", "url", "url_hash", "host", "path",
             (F.col("okey.pd") + 1).alias("depth"),
             F.lit(0).alias("priority"),
@@ -447,7 +422,7 @@ class CrawlEngine:
         )
 
         # ---- commits; counters observed on the write actions themselves.
-        # The eight table commits are mutually independent (all read the
+        # The seven table commits are mutually independent (all read the
         # pinned fetched and seq-partition blocks), so they run as CONCURRENT
         # Spark jobs — the wall cost is the slowest commit, not the sum. Only
         # the crawl_state checkpoint row must come strictly last. Idempotence
@@ -507,13 +482,6 @@ class CrawlEngine:
                 max_files=cfg.commit_files,
             )
 
-        def c_bloom():
-            if probe:
-                batch = new_frontier.select("url")
-                self.bloom.update(
-                    batch, f"bloom-{it}", rebuild_from=seen.select("url").unionByName(batch)
-                )
-
         def c_pend():
             if not compact:
                 return None
@@ -553,13 +521,13 @@ class CrawlEngine:
                     max_files=1,  # template-bounded tiny frame
                 )
 
-        with ThreadPoolExecutor(max_workers=8) as pool:
+        with ThreadPoolExecutor(max_workers=7) as pool:
             futs = {
                 name: pool.submit(fn)
                 for name, fn in [
                     ("order", c_order), ("pages", c_pages), ("fail", c_fail),
-                    ("jobs", c_jobs), ("seen", c_seen), ("bloom", c_bloom),
-                    ("pend", c_pend), ("traps", c_traps),
+                    ("jobs", c_jobs), ("seen", c_seen), ("pend", c_pend),
+                    ("traps", c_traps),
                 ]
             }
             m_order = futs["order"].result()
@@ -568,7 +536,6 @@ class CrawlEngine:
             m_seen = futs["seen"].result()
             m_pend = futs["pend"].result()
             futs["fail"].result()
-            futs["bloom"].result()
             futs["traps"].result()
         n_sched, n_ok = int(m_order["n_sched"]), int(m_pages["n_ok"])
         n_new = int(m_seen["n_new"])
@@ -614,9 +581,7 @@ class CrawlEngine:
           seqs (scheduled exactly once on resume). The seen set keeps their
           rows, so links to them keep deduping — no double-crawl.
         - ``mode="forget"``: expired urls are deleted from the seen table
-          (hash-keyed anti-join rewrite). Once the probe is engaged, the
-          seen filter is rebuilt from the kept rows, so it forgets them too
-          and they probe definitely-new. The url is re-crawled when some
+          (hash-keyed anti-join rewrite). The url is re-crawled when some
           future page links to it, admitted exactly once by the standard
           dedup invariant.
 
@@ -624,9 +589,13 @@ class CrawlEngine:
         recrawl's re-entered rows): rows still pending stay pending even
         when forget deletes their seen rows, the log read_pending reads.
 
-        Recrawl changes no seen row and writes no filter commit; the next
-        probed iteration finds no ``bloom-iter-{k}`` and builds one from the
-        seen table, as at engagement.
+        Crash safety: a crash between the first commit and the state row
+        leaves iteration k half written, and running it as a crawl
+        iteration would skip the commits already there (idempotent ids)
+        and drop the frontier. So expire marks k on crawl_state before its
+        first commit and clears the mark with its state row; ``run()``
+        refuses to start a marked iteration. Calling ``expire()`` again with
+        the same urls and mode completes it.
 
         Unknown urls (never seen) are ignored. Returns counters.
         """
@@ -634,6 +603,7 @@ class CrawlEngine:
         st = self.last_state()
         assert st is not None, "expire() requires a seeded crawl"
         k = int(st["iteration"]) + 1
+        self.catalog.write_marker("crawl_state", _EXPIRING, str(k))
         it = f"iter-{k}"
         prev = f"iter-{k - 1}"
         next_seq = int(st["next_seq"])
@@ -670,8 +640,6 @@ class CrawlEngine:
             kept = anti_join_by_hash(seen, ex.select("url_hash", "url"))
             self.catalog.commit("seen", kept, f"seen-{it}", mode="overwrite")
             n_exp = 0  # forget adds nothing to pending
-            if self._probing(next_seq):
-                self.bloom.build(kept.select("url"), f"bloom-{it}")
         self.catalog.commit("frontier_pending", pending, f"pending-{it}", mode="overwrite")
         # nothing is scheduled, but read_pending(k) anchors on order-iter-{k}
         self.catalog.commit("crawl_order", self._empty(ORDER_DDL).repartition(1), f"order-{it}")
@@ -709,6 +677,7 @@ class CrawlEngine:
             STATE_SCHEMA,
             f"state-{it}",
         )
+        self.catalog.write_marker("crawl_state", _EXPIRING, "")
         return {"iteration": k, "mode": mode, "expired": n_ex, "pending": n_pending}
 
     # -------------------------------------------------------------------- run
@@ -718,10 +687,15 @@ class CrawlEngine:
             self.seed(seeds)
         st = self.last_state()
         assert st is not None, "no checkpoint and no seeds given"
+        k = int(st["iteration"]) + 1
+        if self.catalog.read_marker("crawl_state", _EXPIRING) == str(k):
+            raise RuntimeError(
+                f"iteration {k} is an interrupted expire(): call expire() again "
+                f"with the same urls and mode before resuming"
+            )
         if st["status"] == "complete":
             return []
         stats = []
-        k = int(st["iteration"]) + 1
         limit = max_iterations or self.config.max_iterations
         for _ in range(limit):
             s = self.run_iteration(k)

@@ -1,55 +1,41 @@
-"""URL-seen set: partitioned Bloom accelerator + exact anti-join backstop.
+"""URL-seen set: an exact int64 anti-join against the seen table.
 
 The reference deduplicates with in-memory Python sets (per-family
 ``tracked_files``, crawlers/globus_base_preserved.py:396-403; a stub global
 ``dup_check``, legacy/posix_crawler.py:67-68). At 10^10 URLs the seen set
-cannot live in one memory image, so:
+cannot live in one memory image, so the membership structure is the ``seen``
+table, keyed on ``url_hash = xxhash64(canonical_url)``, and dedup is one
+left-anti join on ``(url_hash, url)`` (``dedup_new_urls``): both sides
+shuffle on the uniform int64 hash, and the full url string rides along as a
+residual because xxhash64 *will* collide a handful of times at 10^10 keys,
+and a collision must never drop an unseen URL.
 
-- the **exact** membership structure is the ``seen`` table, hash-partitioned by
-  ``url_hash = xxhash64(canonical_url)``; dedup is a left-anti join on
-  ``(url_hash, url)`` — the full url string is part of the join key because
-  xxhash64 *will* collide a handful of times at 10^10 keys, and a collision
-  must never drop an unseen URL;
-- a **partitioned Bloom filter** (``seen_filters``; one blob per
-  ``pmod(url_hash, n_buckets)`` bucket) accelerates the common case. Direction
-  of approximation is the safe one: bloom says "definitely new" (skip the
-  exact join entirely) or "maybe seen" (fall through to the exact anti-join).
-  False positives only cost extra exact lookups; they can never lose URLs.
-  Sizing at 10^10 keys / 1% fpp ≈ 12 GB of bits — which is exactly why the
-  filter is bucketed and lives distributed in a table, never on the driver
-  (unlike ``df.stat.bloomFilter`` which collects to one driver-side filter).
+``BloomSeenFilter`` below (a partitioned Bloom filter persisted in the
+``seen_filters`` table, one blob per ``pmod(url_hash, n_buckets)`` bucket)
+is no longer on any crawl path: the probe lost to the exact anti-join in
+every measurement (see ``dedup_new_urls``), and neither a crawl nor
+``expire`` writes ``seen_filters``. The class and its numpy helpers stay
+only because ``perfbench/tracer.py`` still patches
+``BloomSeenFilter.update``; they go, with the ``seen_filters`` name, once
+the benchmark stops patching it. Their design notes, for the record:
 
-**The filter is derived from the seen table**, which stays the source of
-truth. ``build`` folds a given URL set into fresh base blobs in one overwrite
-commit, each bucket's bit array sized from its own row count
-(``bit_array_size``; probes read m back from the blob length). The engine
-builds when the probe first engages (``CrawlConfig.bloom_min_seen``), rebuilds
-every ``compact_every`` iterations from the seen set, and rebuilds from the
-kept rows when ``expire(mode="forget")`` deletes seen rows — so the filter
-forgets too, and no deletable filter is needed. Below the gate no filter is
-written. Between builds an ``update`` appends one tiny *delta* row per touched
-bucket (the packed int64 hash pairs of that batch, ~16 bytes per URL), so
-per-iteration filter-commit bytes scale with the BATCH, never the filter. Readers
-fold a bucket's chain (base blob plus deltas in ``ver`` order) inside the
-probe UDF; snapshot reads (``upto=``) replay any earlier chain untouched, so
-time travel and resume are unaffected.
-
-Tried and lost: a partitioned cuckoo filter with a ``remove()`` delta kind
-(deletable, for expiry) and maintaining the Bloom from iteration 0. Engaged on
-a 586k-URL saturated drain the probes ran at 0.44× (bloom) and 0.15×
-(cuckoo) of the exact anti-join alone (BASELINE.md round 4), and upkeep below
-the gate cost ~3 Spark jobs per iteration for a probe that never ran.
-
-All bloom hash material is computed JVM-side (two independent xxhash64 streams);
-Python only touches int64 numpy arrays inside Arrow-batched grouped UDFs
-(Kirsch-Mitzenmacher double hashing: pos_i = g1 + i*(h2|1) mod m, i = 1..k,
-g1 = h1 ^ (h1 >> 32) — h1's low bits double as the bucket id, so they are
-folded with the unconstrained high bits before probing; see _positions).
-
-Because base blobs bake positions into bytes while delta rows persist raw
-hashes, the table carries a ``position-scheme`` catalog marker; probing or
-writing under a different scheme than the blobs were built with refuses
-loudly instead of silently false-negativing (see _check_scheme).
+- the filter is derived from the seen table. ``build`` folds a URL set into
+  fresh base blobs in one overwrite commit, each bucket's bit array sized
+  from its own row count (``bit_array_size``; probes read m back from the
+  blob length). Between builds ``update`` appends one delta row per touched
+  bucket (the packed int64 hash pairs of that batch, ~16 bytes per URL), so
+  filter-commit bytes scale with the batch; readers fold a bucket's chain
+  (base blob plus deltas in ``ver`` order) inside the probe UDF.
+- all hash material is computed JVM-side (two independent xxhash64
+  streams); Python only touches int64 numpy arrays inside Arrow-batched
+  grouped UDFs (Kirsch-Mitzenmacher double hashing: pos_i = g1 + i*(h2|1)
+  mod m, i = 1..k, g1 = h1 ^ (h1 >> 32) — h1's low bits double as the
+  bucket id, so they are folded with the unconstrained high bits before
+  probing; see _positions).
+- base blobs bake positions into bytes while delta rows persist raw hashes,
+  so the table carries a ``position-scheme`` catalog marker; probing or
+  writing under a different scheme than the blobs were built with refuses
+  loudly instead of silently false-negativing (see _check_scheme).
 """
 
 from __future__ import annotations
@@ -348,27 +334,28 @@ def anti_join_by_hash(
     return left.join(r, cond, "left_anti")
 
 
-def anti_join_seen(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
+def dedup_new_urls(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """Exact dedup: drop candidates whose (url_hash, url) is in the seen set.
 
     Shuffles both sides on the uniform int64 hash (no host skew, no string
     sort keys); url equality rides along as a residual (anti_join_by_hash).
+
+    Tried and lost: a Bloom probe ahead of this join (``BloomSeenFilter``),
+    with definitely-new candidates skipping the join and only maybe-seen
+    ones falling through to it, plus a partitioned cuckoo variant for
+    deletion. Forced on a saturated 586k-URL drain, the probes ran at 0.44×
+    (Bloom) and 0.15× (cuckoo) of this join alone (BASELINE.md round 4).
+    In the probe's best case, 20M seen rows and a 200k batch 95% of which
+    was new, it still ran at 0.85×, losing in every pair (BASELINE.md
+    "Measured (growth PR 2)"). The probe shrinks the join's left side, but
+    the cost is the right side: the whole seen set is still scanned and
+    shuffled on its int64 key for the maybe-seen remainder, and a left anti
+    join cannot broadcast its left side. The probe only adds a Python
+    cogroup pass over the batch, a blob read, per-iteration filter upkeep
+    and a definite-new/maybe-seen union split that duplicates the
+    candidate pipeline (exchange reuse does not cross the Python cogroup).
+    Probe designs such as data-aware Bloom hashing (VLDB 2022) and learned
+    cuckoo filters (SIGMOD 2023) assume a probe far cheaper than the
+    backing lookup, which a co-partitioned int64 anti-join is not.
     """
-    if seen is None:
-        return candidates
     return anti_join_by_hash(candidates, seen.select("url_hash", "url"))
-
-
-def dedup_new_urls(
-    candidates: DataFrame,
-    seen: DataFrame | None,
-    bloom: BloomSeenFilter | None,
-    bloom_upto: str | None = None,
-) -> DataFrame:
-    """Bloom fast-path + exact anti-join backstop (see module docstring)."""
-    if bloom is None or seen is None:
-        return anti_join_seen(candidates, seen)
-    flagged = bloom.flag_maybe_seen(candidates, upto=bloom_upto)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(anti_join_seen(maybe, seen))

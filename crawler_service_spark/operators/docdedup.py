@@ -327,7 +327,12 @@ def minhash_verified_pairs(
     (tiny next to the corpus) while the shingle-set side is the corpus —
     left to size estimates, the planner was observed broadcasting the
     corpus' shingle arrays instead, which is slow here and an OOM at
-    10^10 docs. A degenerate corpus whose bucket co-occupancy makes the
+    10^10 docs. The hint sits on the pair frame alone, BEFORE the ``sa``
+    lookup: hinting the enriched ``cand ⋈ sa`` frame broadcast every
+    candidate's shingle array, so per-task memory grew with the near-dup
+    cluster size. The ``sb`` lookup is left to the planner's estimates (a
+    shuffle join once the enriched frame outgrows the broadcast threshold).
+    A degenerate corpus whose bucket co-occupancy makes the
     candidate set itself corpus-sized should pre-split its buckets (the
     same regime minhash_incremental_dups' broadcast_candidates=False
     escape hatch covers).
@@ -337,7 +342,7 @@ def minhash_verified_pairs(
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
     inter = (
-        F.broadcast(F.broadcast(cand).join(sa, "doc_a"))
+        F.broadcast(cand).join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
             "doc_a",

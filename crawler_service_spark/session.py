@@ -12,6 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's physical memory (``MemTotal``) as a JVM size, so
+    the local driver heap never claims more than the machine has; 4g where
+    ``meminfo`` is unreadable (not Linux)."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"  # kB -> MiB, halved
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "crawler_service_spark",
     cpus: int | None = None,
@@ -21,6 +35,8 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEMORY`` when set, else
+    ``default_driver_memory()``.
     ``shuffle_partitions`` defaults to ``cpus`` — on a real cluster you set this to
     2-3x total executor cores; at 100 TB you additionally rely on AQE coalescing so
     an over-provisioned static number is safe.
@@ -47,7 +63,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

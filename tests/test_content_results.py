@@ -158,7 +158,7 @@ def test_expand_archives_byte_exact_and_reenters_frontier(spark):
     seen = spark.createDataFrame(
         [("https://x.com/data.zip!/b.csv",)], "url string"
     ).select(url_hash_col("url").alias("url_hash"), "url")
-    new = dedup_new_urls(cand, seen, None)
+    new = dedup_new_urls(cand, seen)
     urls = sorted(r["url"] for r in new.select("url").collect())
     # inner/a.txt blocked by robots, b.csv already seen -> two genuinely new
     assert urls == [

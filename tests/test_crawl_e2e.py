@@ -35,12 +35,9 @@ def engine_run(spark, small_fixture, tmp_path_factory):
         pages=spark.read.parquet(small_fixture["pages"]),
         robots=spark.read.parquet(small_fixture["robots_rules"]),
         workdir=str(wd),
-        # bloom_min_seen=0: exercise the bloom-probe fast path end-to-end even
-        # at test scale (production default engages it only at large seen sets);
         # commit_files=8: the bounded commit path the benchmarks and soak run
         config=CrawlConfig(
-            iteration_seconds=ITER_S, global_cap=CAP, max_iterations=200, bloom_min_seen=0,
-            commit_files=8,
+            iteration_seconds=ITER_S, global_cap=CAP, max_iterations=200, commit_files=8,
         ),
     )
     stats = eng.run(seeds=spark.read.parquet(small_fixture["seeds"]))
@@ -133,8 +130,8 @@ def test_commit_jobs_read_only_finished_checkpoints(spark, tiny_fixture, tmp_pat
     checkpoint a commit reads must be finished before the commits start.
     Here the commits run one at a time, each checked before it writes, so
     no earlier commit can finish a checkpoint for a later one. Compacting
-    every iteration with the probe engaged puts the most commits on the
-    checkpoints; the last iteration has no new urls."""
+    every iteration puts the most commits on the checkpoints; the last
+    iteration has no new urls."""
     from concurrent.futures import Future
 
     from crawler_service_spark import engine as engine_mod
@@ -183,7 +180,7 @@ def test_commit_jobs_read_only_finished_checkpoints(spark, tiny_fixture, tmp_pat
         spark.read.parquet(tiny_fixture["pages"]),
         spark.read.parquet(tiny_fixture["robots_rules"]),
         str(tmp_path / "wd"),
-        CrawlConfig(iteration_seconds=60.0, frontier_compact_ratio=0, bloom_min_seen=0),
+        CrawlConfig(iteration_seconds=60.0, frontier_compact_ratio=0),
     )
     stats = eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     assert stats[-1]["status"] == "complete" and stats[-1]["new_urls"] == 0

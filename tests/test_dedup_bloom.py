@@ -1,14 +1,13 @@
-"""Bloom-filter safety (SURVEY.md §5.2): the bloom is an accelerator whose
-approximation direction can only cost extra work, never lose URLs.
+"""Bloom-filter safety (SURVEY.md §5.2) for ``BloomSeenFilter``, which no
+crawl path uses any more (the exact anti-join is the one dedup path; see
+``operators/dedup.py``) and which stays only until the benchmark stops
+patching it. Its approximation direction can only cost extra work, never
+lose URLs:
 
 - no false negatives: every URL that was added to the filter flags
   ``maybe_seen=True`` on probe — even in a deliberately saturated filter;
-- end-to-end: ``dedup_new_urls`` returns exactly the unseen set with a
-  near-100%-fpp bloom (the exact anti-join backstop catches all false
-  positives);
-- the filter is derived from the seen table: built (bits sized from the row
-  count) when the probe first engages, rebuilt on the compaction cadence,
-  never written below the gate.
+- builds size bits from the row count, deltas scale with the batch, and
+  rebuilds on the compaction cadence probe identically.
 """
 
 from __future__ import annotations
@@ -17,21 +16,17 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_service_spark.engine import CrawlConfig, CrawlEngine
 from crawler_service_spark.functions.urls import url_hash_col
 from crawler_service_spark.operators.dedup import (
     BloomSeenFilter,
     _member,
     _set_bits,
     bit_array_size,
-    dedup_new_urls,
 )
 from crawler_service_spark.storage import ManifestCatalog
-from tests.oracle import load_fixture, oracle_crawl
 
 SEEN_URLS = [f"https://h{i % 7}.example.com/seen/{i}" for i in range(300)]
 NEW_URLS = [f"https://h{i % 7}.example.com/new/{i}" for i in range(120)]
-ITER_S = 4.0  # small per-host budget => the tiny fixture needs several iterations
 
 
 @pytest.fixture()
@@ -52,34 +47,6 @@ def test_no_false_negatives_even_when_saturated(spark, catalog):
 
     flagged = bloom.flag_maybe_seen(seen)
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_dedup_exact_despite_false_positives(spark, catalog):
-    bloom = BloomSeenFilter(catalog, n_buckets=2, m_bits=64, k_hashes=3)
-    seen = urls_df(spark, SEEN_URLS)
-    bloom.update(seen.select("url"), "bloom-0")
-
-    cand = urls_df(spark, SEEN_URLS + NEW_URLS)
-    out = dedup_new_urls(cand, seen, bloom)
-    assert sorted(r["url"] for r in out.collect()) == sorted(NEW_URLS)
-
-
-def test_dedup_with_healthy_bloom_and_fast_path(spark, catalog):
-    # realistically-sized filter: most new urls take the bloom fast path
-    bloom = BloomSeenFilter(catalog, n_buckets=4, m_bits=1 << 14, k_hashes=7)
-    seen = urls_df(spark, SEEN_URLS)
-    bloom.update(seen.select("url"), "bloom-0")
-
-    cand = urls_df(spark, SEEN_URLS + NEW_URLS)
-    flagged = bloom.flag_maybe_seen(cand)
-    # every truly-seen url is flagged; the fast path actually engages
-    assert flagged.filter(~F.col("maybe_seen")).filter(
-        F.col("url").contains("/seen/")
-    ).count() == 0
-    assert flagged.filter(~F.col("maybe_seen")).count() > 0
-
-    out = dedup_new_urls(cand, seen, bloom)
-    assert sorted(r["url"] for r in out.collect()) == sorted(NEW_URLS)
 
 
 def test_incremental_update_across_commits(spark, catalog):
@@ -196,44 +163,3 @@ def test_filter_sized_for_an_engagement_build_meets_one_percent():
     fpr = _member(bits, *hashes(probes), k).mean()
     assert fpr <= 0.01, f"simulated FPR {fpr:.4f} at the engagement size"
 
-
-def test_probe_gate_builds_from_seen_and_matches_oracle(spark, tiny_fixture, tmp_path):
-    """With ``bloom_min_seen`` between the seed count and the final seen
-    count, the crawl equals the oracle; no filter commit exists before the
-    gate; the first commit is a build from the seen snapshot of the
-    iteration before the first probed one, and it flags every URL in that
-    snapshot (no false negatives)."""
-    pages, seeds, robots = load_fixture(tiny_fixture)
-    oracle = oracle_crawl(pages, seeds, robots, iteration_seconds=ITER_S)
-    n_seeds = sum(1 for _it, _seq, depth, _url in oracle.order if depth == 0)
-    gate = (n_seeds + len(oracle.seen)) // 2
-    assert n_seeds < gate < len(oracle.seen)
-    eng = CrawlEngine(
-        spark,
-        spark.read.parquet(tiny_fixture["pages"]),
-        spark.read.parquet(tiny_fixture["robots_rules"]),
-        str(tmp_path / "gate"),
-        CrawlConfig(iteration_seconds=ITER_S, bloom_min_seen=gate),
-    )
-    eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
-
-    order = [
-        (r["iteration"], r["seq"], r["depth"], r["url"])
-        for r in eng.catalog.read("crawl_order")
-        .orderBy("iteration", "depth", F.desc("priority"), "seq").collect()
-    ]
-    assert order == oracle.order
-    assert {r["url"] for r in eng.catalog.read("seen").collect()} == oracle.seen
-
-    states = sorted(
-        (r["iteration"], r["next_seq"]) for r in eng.catalog.read("crawl_state").collect()
-    )
-    engaged = next(i for i, next_seq in states if next_seq >= gate)
-    assert engaged < states[-1][0], "the gate must engage before the crawl ends"
-    modes = eng.catalog.commit_modes(BloomSeenFilter.TABLE)
-    assert modes[0] == (f"bloom-iter-{engaged}", "overwrite")
-    assert all(int(c.rsplit("-", 1)[1]) >= engaged for c, _m in modes)
-
-    snap = eng.catalog.read("seen", upto=f"seen-iter-{engaged}").select("url", "url_hash")
-    flagged = eng.bloom.flag_maybe_seen(snap, upto=f"bloom-iter-{engaged}")
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0

@@ -6,18 +6,22 @@ resume() keep working untouched:
 - recrawl: expired urls re-enter the frontier with fresh seqs and are
   re-scheduled EXACTLY once; the seen set keeps their rows so links to them
   keep deduping (no double-crawl).
-- forget: seen rows deleted, and once the probe is engaged the seen filter
-  is rebuilt from the kept rows, so the forgotten urls probe definitely
-  new; the url is re-admitted exactly once by the standard dedup invariant
-  when next linked.
+- forget: seen rows deleted, so the exact dedup admits the url again,
+  exactly once, when it is next linked.
+
+A crash inside expire() must not be resumed as a crawl iteration.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from crawler_service_spark.engine import CrawlConfig, CrawlEngine
+from crawler_service_spark.storage import ManifestCatalog
+from tests.conftest import engine_snapshot
 
 
 def _build(spark, fixture, workdir, **cfg):
@@ -31,12 +35,11 @@ def _build(spark, fixture, workdir, **cfg):
 
 
 _RECRAWL_CFG = {
-    "exact": dict(bloom_min_seen=None),
-    "bloom": dict(bloom_min_seen=0),
+    "exact": dict(),
     # no compaction ever: every earlier scheduling of the expired urls is
     # still in the chain read_pending subtracts, so only their fresh seqs
     # keep the re-entered rows live
-    "never_compact": dict(bloom_min_seen=None, frontier_compact_ratio=1e18),
+    "never_compact": dict(frontier_compact_ratio=1e18),
 }
 
 
@@ -76,12 +79,14 @@ def test_expire_recrawl_exactly_once(spark, tiny_fixture, tmp_path, kind):
         eng.catalog.read("seen").groupBy("url").agg(F.count("*").alias("n"))
     )
     assert seen_counts.filter("n > 1").count() == 0
+    assert not eng.catalog.exists("seen_filters")
 
 
 def test_expire_forget_readmits_exactly_once(spark, tiny_fixture, tmp_path):
+    from crawler_service_spark.functions.urls import url_hash_col
     from crawler_service_spark.operators.dedup import dedup_new_urls
 
-    eng = _build(spark, tiny_fixture, tmp_path / "forget", bloom_min_seen=0)
+    eng = _build(spark, tiny_fixture, tmp_path / "forget")
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     k = int(eng.last_state()["iteration"])
     all_seen = sorted(r["url"] for r in eng.catalog.read("seen").select("url").collect())
@@ -95,22 +100,15 @@ def test_expire_forget_readmits_exactly_once(spark, tiny_fixture, tmp_path):
     left = sorted(r["url"] for r in seen_after.select("url").collect())
     assert left == [u for u in all_seen if u not in expired]
 
-    # the filter rebuilt from the kept rows forgot them: probing the
-    # expired urls flags definitely-new, so a future link re-admits them
-    # through the normal dedup path exactly once
-    from crawler_service_spark.functions.urls import url_hash_col
-
-    assert eng.catalog.commit_modes("seen_filters")[-1] == (f"bloom-iter-{k + 1}", "overwrite")
-    cand = ex_df.withColumn("url_hash", url_hash_col("url"))
-    flagged = eng.bloom.flag_maybe_seen(cand, upto=f"bloom-iter-{k + 1}")
-    assert flagged.filter(F.col("maybe_seen")).count() == 0
-    kept = seen_after.select("url", "url_hash")
-    assert eng.bloom.flag_maybe_seen(kept, upto=f"bloom-iter-{k + 1}") \
-        .filter(~F.col("maybe_seen")).count() == 0
-    admitted = dedup_new_urls(
-        cand, seen_after, eng.bloom, bloom_upto=f"bloom-iter-{k + 1}"
+    # links to every url ever seen: the exact dedup against the forget
+    # snapshot admits exactly the forgotten ones, so a future link
+    # re-admits each of them once
+    cand = spark.createDataFrame([(u,) for u in all_seen], "url string").withColumn(
+        "url_hash", url_hash_col("url")
     )
+    admitted = dedup_new_urls(cand, seen_after)
     assert sorted(r["url"] for r in admitted.collect()) == expired
+    assert not eng.catalog.exists("seen_filters")
 
 
 def test_expire_forget_keeps_live_frontier(spark, tiny_fixture, tmp_path):
@@ -143,10 +141,71 @@ def test_expire_forget_keeps_live_frontier(spark, tiny_fixture, tmp_path):
 
 
 def test_expire_unknown_urls_ignored(spark, tiny_fixture, tmp_path):
-    eng = _build(spark, tiny_fixture, tmp_path / "unk", bloom_min_seen=0)
+    eng = _build(spark, tiny_fixture, tmp_path / "unk")
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     res = eng.expire(
         spark.createDataFrame([("https://nowhere.example.com/x",)], "url string")
     )
     assert res["expired"] == 0 and res["pending"] == 0
     assert eng.last_state()["status"] == "complete"
+
+
+def _manifests(workdir):
+    return sorted(
+        (table, m)
+        for table in os.listdir(workdir)
+        if os.path.isdir(os.path.join(workdir, table, "_manifests"))
+        for m in os.listdir(os.path.join(workdir, table, "_manifests"))
+    )
+
+
+@pytest.mark.parametrize("mode", ["recrawl", "forget"])
+def test_expire_crash_before_its_state_row_is_not_resumed(
+    spark, tiny_fixture, tmp_path, monkeypatch, mode
+):
+    """expire() dies after its seen and pending commits, before its state
+    row. resume() must not run that pseudo-iteration as a crawl iteration
+    (its idempotent commits would skip the ids expire wrote, and the crawl
+    would end "complete" with most of the frontier lost): it either reaches
+    the uninterrupted expire+resume state, or raises before writing
+    anything, and then expire() with the same urls completes it."""
+    seeds = spark.read.parquet(tiny_fixture["seeds"])
+
+    def after_one_iteration(name):
+        eng = _build(spark, tiny_fixture, tmp_path / name)
+        eng.run(seeds=seeds, max_iterations=1)
+        assert eng.last_state()["status"] == "running"
+        return eng
+
+    ref = after_one_iteration("ref")
+    k = int(ref.last_state()["iteration"]) + 1
+    urls = sorted(r["url"] for r in ref.catalog.read("seen").select("url").collect())[:3]
+    ex_df = spark.createDataFrame([(u,) for u in urls], "url string")
+    ref.expire(ex_df, mode=mode)
+    ref.resume()
+    want = engine_snapshot(ref)
+
+    eng = after_one_iteration("crash")
+    real_commit = ManifestCatalog.commit
+
+    def crashing_commit(self, table, df, commit_id, *args, **kwargs):
+        if commit_id == f"order-iter-{k}":
+            raise RuntimeError("injected crash")
+        return real_commit(self, table, df, commit_id, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ManifestCatalog, "commit", crashing_commit)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            eng.expire(ex_df, mode=mode)
+    wd = str(tmp_path / "crash")
+    assert {"seen", "frontier_pending"} <= {t for t, m in _manifests(wd) if f"-iter-{k}." in m}
+    before = _manifests(wd)
+
+    eng2 = _build(spark, tiny_fixture, wd)
+    try:
+        eng2.resume()
+    except RuntimeError:
+        assert _manifests(wd) == before, "resume wrote commits before refusing"
+        eng2.expire(ex_df, mode=mode)
+        eng2.resume()
+    assert engine_snapshot(eng2) == want

@@ -9,9 +9,12 @@ do not exercise.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from crawler_service_spark.operators import docdedup, similarity
+from crawler_service_spark.plans.bucketing import plan_string
 
 
 def _docs(spark, rows):
@@ -69,6 +72,32 @@ def test_verified_pairs_zero_overlap_candidates_drop(spark):
     assert all(r["jaccard_permille"] > 0 for r in pairs)
     exact = {(r["doc_a"], r["doc_b"]): r["jaccard_permille"] for r in pairs}
     assert exact.get((1, 2)) == 1000  # identical docs: full Jaccard
+
+
+def test_verified_pairs_broadcasts_no_shingle_arrays(spark):
+    """Only the |pairs|-bounded candidate frame may be broadcast: a
+    broadcast of the frame enriched with per-doc shingle arrays grows
+    per-task memory with the near-dup cluster size. With size-based
+    broadcasts off, every BroadcastExchange in the executed plan must take
+    in no ``sa``/``sb`` array column."""
+    docs = _docs(
+        spark,
+        [(i, "p q r s t u v w x y") for i in range(1, 6)] + [(9, "aa bb cc dd ee")],
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = docdedup.minhash_verified_pairs(
+            docs, num_hashes=8, bands=4, n=3, threshold_permille=0
+        )
+        got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+        plan = plan_string(pairs)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == {(a, b) for a in range(1, 6) for b in range(a + 1, 6)}
+    inputs = re.findall(r"\(\d+\) BroadcastExchange\s*\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert inputs, "the candidate pairs are broadcast"
+    assert not [i for i in inputs if re.search(r"\bs[ab]#", i)], inputs
 
 
 def test_ngram_jaccard_posting_list_pair_enumeration(spark):

@@ -3,21 +3,18 @@
 What no regular test exercises at depth: long frontier delta chains (the
 seen rows discovered since the last pending overwrite, reconstructed as
 overwrite + seen tail ANTI crawl_order on seq) across MULTIPLE
-compactions, seen-filter LSM delta chains across
-``compact_every`` rebuilds, and kill/resume deep into a crawl. Protocol:
+compactions, and kill/resume deep into a crawl. Protocol:
 
 - 1.2M-page fixture (10x the sf0.1 bench crawl), all URLs seeded as a
   depth-0 frontier, ``global_cap`` throttled so draining takes 100+
   iterations;
-- the probe path is FORCED on (``bloom_min_seen=0``) so the seen-filter LSM
-  read/probe chain is exercised across every fold;
 - the run is KILLED at iteration ~55 (max_iterations), a NEW engine resumes
   from the catalog checkpoint and drains to completion;
 - invariants checked at the end: every URL scheduled exactly once, seq
   strictly unique, iteration numbering continuous across the resume;
 - curves recorded: wall/iteration and write-bytes/iteration, bucketed into
-  deciles. FLAT curves = the LSM claims hold (per-iteration cost tracks the
-  BATCH, not the accumulated frontier/seen/filter state).
+  deciles. FLAT curves = the incremental-commit claims hold (per-iteration
+  cost tracks the BATCH, not the accumulated frontier/seen state).
 
 Usage: PYTHONPATH=/root/repo python tools/soak_bench.py   (one JSON line)
 Env: SPARK_GRAFT_SOAK_PAGES (default 1200000), SPARK_GRAFT_SOAK_CAP (12000).
@@ -62,7 +59,6 @@ def _cfg() -> CrawlConfig:
         salt_lanes=8,
         eager_checkpoints=True,
         commit_files=8,
-        bloom_min_seen=0,  # engage the probe from iteration 1
         max_iterations=10_000,
     )
 
